@@ -158,9 +158,10 @@ N_RUNS = 3
 #   * bounded outlier re-run: a query reading > RERUN_FACTOR x its
 #     committed BENCH_FULL.json sidecar figure triggers an on-the-spot
 #     u01 probe; if that reads >= PROBE_GATE (host hot NOW), the query is
-#     re-run once (same warm-up-already-done median-of-N protocol) and the
-#     smaller median kept. Both readings land in the sidecar under
-#     "reruns" so the adjudication is reproducible from the artifact.
+#     re-run once (same warm-up-already-done median-of-N protocol). The
+#     re-run is report-only: the first median stays the recorded figure,
+#     and both readings land in the sidecar under "reruns" so a reader
+#     can judge the contention from the artifact.
 # Neither changes the timed protocol of a query measured on a quiet host.
 PROBE_GATE = 1.5
 PROBE_MAX_RETRIES = 5
@@ -393,8 +394,9 @@ def main() -> None:
         release_persisted()
         med = _timed_medians(fn)
         # r12 outlier re-run: >RERUN_FACTOR x the committed sidecar figure
-        # AND the host probe is hot RIGHT NOW -> one bounded re-run, keep
-        # the smaller median, record both.
+        # AND the host probe is hot RIGHT NOW -> one bounded re-run,
+        # REPORT-ONLY: the first median stays the official figure and the
+        # [first, rerun] pair goes to the sidecar's `reruns`.
         if (
             probe
             and name in ref_map
@@ -406,7 +408,6 @@ def main() -> None:
             release_persisted()
             med2 = _timed_medians(fn)
             reruns[name] = [round(med, 3), round(med2, 3)]
-            med = min(med, med2)
         timings[name] = round(med, 3)
         release_persisted()  # drop operator-cached blocks between queries
     if probe:

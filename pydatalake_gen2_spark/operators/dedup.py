@@ -898,6 +898,12 @@ def semdedup_exact(
     one integer gemm, max_cell guards collapse. The per-cell pairwise
     contraction is unchanged in spirit; only the arithmetic substrate
     moved from float32-ish gemm to exact int64.
+
+    The per-cell output is persisted (tracked for ``release_persisted``):
+    a caller's global ``orderBy`` range-partitions it, and Spark's
+    boundary-sampling job would otherwise run the whole groupBy(cid)
+    Python stage a second time. Measured on l31 at sf0.1 (2,000 rows):
+    two stages each read the same 645 KB shuffle and re-ran the cells.
     """
     import numpy as np
     import pandas as pd
@@ -968,4 +974,6 @@ def semdedup_exact(
             "keep": keep,
         })
 
-    return assigned.groupBy("cid").applyInPandas(dedup_cell, out_type)
+    return track_persist(
+        assigned.groupBy("cid").applyInPandas(dedup_cell, out_type)
+    )

@@ -19,12 +19,14 @@ Recipe (each step deterministic in any IEEE-754 engine):
      the driver uses Python's big-int //, same value). Empty clusters
      keep their previous centroid.
 
-Scale posture: per iteration = ONE scan; the shuffle carries k x dim
-int64 partial sums per map task (a few KB), the driver collects k rows
-(bounded), and the next iteration's centroids ship as broadcast
-literals. That is the textbook 1000-executor k-means loop — no lineage
-growth because each iteration rebuilds the plan from collected literals
-(the iterative-operator discipline operators/graph.py uses).
+Scale posture: per iteration = ONE map-only pass and ONE job. Each
+map task assigns its points and emits int64 (cid, n, s[dim]) partial
+sums for the clusters it saw (at most k rows per task, a few KB); the
+driver collects them and reduces with Python ints. No round shuffles,
+and the next iteration's centroids ship in the UDF closure. That is the
+textbook 1000-executor k-means loop — no lineage growth because each
+iteration rebuilds the plan from collected literals (the
+iterative-operator discipline operators/graph.py uses).
 """
 
 from __future__ import annotations
@@ -48,38 +50,45 @@ def quantize(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") 
     return df.select(F.col(id_col).alias("vec_id"), q.alias("q"))
 
 
+def _nearest(x: np.ndarray, c: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(dist, cid) int64 arrays: each row of ``x`` against codebook ``c``.
+
+    EXACT numpy int64 (|q| <= 1e6, so diffs, squares, and 64-term sums
+    all stay far inside int64 — bit-identical to any integer engine); a
+    strict ``<`` over ascending j keeps the first minimum, i.e. the
+    smallest-cid tie-break."""
+    best_d = None
+    best_j = np.zeros(len(x), dtype=np.int64)
+    for j in range(c.shape[0]):
+        diff = x - c[j]
+        d2 = (diff * diff).sum(axis=1)
+        if best_d is None:
+            best_d = d2
+        else:
+            m = d2 < best_d
+            best_d = np.where(m, d2, best_d)
+            best_j = np.where(m, np.int64(j), best_j)
+    return best_d, best_j
+
+
 def assign(pts: DataFrame, cents: list[list[int]]) -> DataFrame:
     """(vec_id, q, dist, cid): nearest centroid, ties to smallest cid.
 
-    Arrow pandas UDF over EXACT numpy int64 (|q| <= 1e6, so diffs,
-    squares, and 64-term sums all stay far inside int64 — bit-identical
-    to any integer engine); np.argmin-style first-minimum gives the
-    smallest-cid tie-break. The codebook rides in the closure, NOT as
-    per-centroid literal expression trees, so the plan is O(1) in
-    k x dim and codegen never recompiles a giant tree per Lloyd round —
-    the same design call as operators/similarity.ivf_topk (measured:
-    the literal-tree form spent 2-4 s/round COMPILING at k=8; at the
-    k=256 a real IVF trainer needs it would be unusable)."""
+    Arrow pandas UDF over the ``_nearest`` kernel. The codebook rides in
+    the closure, NOT as per-centroid literal expression trees, so the
+    plan is O(1) in k x dim and codegen never recompiles a giant tree
+    per Lloyd round — the same design call as operators/similarity.
+    ivf_topk (measured: the literal-tree form spent 2-4 s/round
+    COMPILING at k=8; at the k=256 a real IVF trainer needs it would be
+    unusable)."""
     c = np.asarray(cents, dtype=np.int64)
 
     @F.pandas_udf("array<bigint>")
     def pick(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
-        x = np.stack(v.to_numpy()).astype(np.int64)
-        best_d = None
-        best_j = None
-        for j in range(c.shape[0]):
-            diff = x - c[j]
-            d2 = (diff * diff).sum(axis=1)
-            if best_d is None:
-                best_d = d2
-                best_j = np.zeros(len(d2), dtype=np.int64)
-            else:
-                m = d2 < best_d
-                best_d = np.where(m, d2, best_d)
-                best_j = np.where(m, np.int64(j), best_j)
-        return pd.Series(np.stack([best_d, best_j], axis=1).tolist())
+        d, j = _nearest(np.stack(v.to_numpy()).astype(np.int64), c)
+        return pd.Series(np.stack([d, j], axis=1).tolist())
 
     picked = pts.select("vec_id", "q", pick("q").alias("_p"))
     return picked.select(
@@ -89,22 +98,48 @@ def assign(pts: DataFrame, cents: list[list[int]]) -> DataFrame:
     )
 
 
-def update(assigned: DataFrame, cents: list[list[int]], dim: int) -> list[list[int]]:
-    """Floor-mean centroids from exact int64 sums; empty clusters keep
-    their previous centroid. Driver collect is k rows — bounded."""
-    # per-dim sums as parsed expr STRINGS: the former per-call Column
-    # chain (sum(col(q)[d]).alias per dim) cost ~4 py4j round trips per
-    # dimension per round (~1-3 ms each — the r11 simhash finding);
-    # F.expr parses to the identical aggregate expressions.
-    rows = assigned.groupBy("cid").agg(
-        F.expr("count(1) AS n"),
-        *[F.expr(f"sum(q[{d}]) AS s{d}") for d in range(dim)],
+def update(pts: DataFrame, cents: list[list[int]], dim: int) -> list[list[int]]:
+    """One Lloyd round: assign ``pts`` under ``cents`` and return the
+    floor-mean centroids; empty clusters keep their previous centroid.
+
+    A single mapInPandas pass (1 job, 1 stage, no shuffle): each task
+    runs the ``_nearest`` kernel over its batches and emits its int64
+    (cid, n, s[dim]) partial sums, one row per cluster it saw. The
+    driver sums the <= k rows per task with Python ints and applies the
+    exact floor ``//``."""
+    c = np.asarray(cents, dtype=np.int64)
+    k = c.shape[0]
+
+    def partials(batches):
+        n = np.zeros(k, dtype=np.int64)
+        s = np.zeros((k, dim), dtype=np.int64)
+        for b in batches:
+            if len(b) == 0:
+                continue
+            x = np.stack(b["q"].to_numpy()).astype(np.int64)
+            _, j = _nearest(x, c)
+            n += np.bincount(j, minlength=k)
+            np.add.at(s, j, x)
+        seen = np.flatnonzero(n)
+        if len(seen):
+            yield pd.DataFrame({
+                "cid": seen.astype(np.int32),
+                "n": n[seen],
+                "s": list(s[seen]),
+            })
+
+    rows = pts.select("q").mapInPandas(
+        partials, "cid int, n bigint, s array<bigint>"
     ).collect()
-    new = [list(c) for c in cents]
+    n = [0] * k
+    tot = [[0] * dim for _ in range(k)]
     for r in rows:
-        n = r["n"]
-        new[r["cid"]] = [r[f"s{d}"] // n for d in range(dim)]
-    return new
+        n[r["cid"]] += r["n"]
+        tot[r["cid"]] = [a + b for a, b in zip(tot[r["cid"]], r["s"])]
+    return [
+        [t // n[j] for t in tot[j]] if n[j] else list(cents[j])
+        for j in range(k)
+    ]
 
 
 def lloyd(
@@ -121,5 +156,5 @@ def lloyd(
             "assume k seeded centroids exist"
         )
     for _ in range(iters):
-        cents = update(assign(pts, cents), cents, dim)
+        cents = update(pts, cents, dim)
     return cents, assign(pts, cents)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pydatalake_gen2_spark.operators.util import spread, track_persist
+from pydatalake_gen2_spark.operators.util import spread, track_broadcast, track_persist
 from pydatalake_gen2_spark.operators.vectors import as_double, cosine, dot, l2_norm
 
 
@@ -216,6 +216,22 @@ def _local_topk_indices(qids, ids, cos, k):
     return np.sort(order[rank < k])
 
 
+def _lookup(sorted_ids, keys):
+    """Row positions of ``keys`` in the sorted id array; raises on any key
+    the matrix does not hold (a bare searchsorted would silently return a
+    neighbour's position and score the wrong vector)."""
+    import numpy as np
+
+    idx = np.minimum(np.searchsorted(sorted_ids, keys), len(sorted_ids) - 1)
+    hit = sorted_ids[idx] == keys
+    if not hit.all():
+        raise KeyError(
+            f"{int((~hit).sum())} id(s) absent from the broadcast matrix, "
+            f"e.g. {keys[~hit][:4].tolist()}"
+        )
+    return idx
+
+
 def _pair_cos_lookup_arrow(bc, dim: int = 64, id_col: str = "vec_id",
                            local_k: int | None = None):
     """mapInArrow scorer over (query_id, id) KEY batches: both vectors are
@@ -237,8 +253,8 @@ def _pair_cos_lookup_arrow(bc, dim: int = 64, id_col: str = "vec_id",
                 continue
             qids = b.column("query_id").to_numpy(zero_copy_only=False)
             ids = b.column(id_col).to_numpy(zero_copy_only=False)
-            qm = mat[np.searchsorted(sorted_ids, qids)].astype(np.float64)
-            cm = mat[np.searchsorted(sorted_ids, ids)].astype(np.float64)
+            qm = mat[_lookup(sorted_ids, qids)].astype(np.float64)
+            cm = mat[_lookup(sorted_ids, ids)].astype(np.float64)
             n = qm.shape[0]
             acc_qc = np.zeros(n, dtype=np.float64)
             acc_qq = np.zeros(n, dtype=np.float64)
@@ -500,9 +516,11 @@ def lsh_topk(
             .to_numpy(zero_copy_only=False).reshape(len(ids_np), dim)
         )
         order = np.argsort(ids_np, kind="stable")
-        bc = corpus.sparkSession.sparkContext.broadcast(
+        # Tracked: release_persisted() destroys it, so consume the result
+        # before releasing (util.py contract).
+        bc = track_broadcast(corpus.sparkSession.sparkContext.broadcast(
             (ids_np[order], mat[order])
-        )
+        ))
         scored = pairs.mapInArrow(
             _pair_cos_lookup_arrow(bc, dim=dim, id_col=id_col, local_k=k),
             schema=f"query_id BIGINT, {id_col} BIGINT, cos DOUBLE",

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 
 # Frames persisted by library operators (ivf_topk / lsh_topk /
@@ -12,6 +13,12 @@ from pyspark.sql import DataFrame
 # queries; a long-lived session that skips it holds evictable
 # MEMORY_AND_DISK blocks, not a hard leak.
 _TRACKED: list[DataFrame] = []
+# Broadcasts created by library operators (lsh_topk's small-path matrix).
+# Unlike a persisted frame, a destroyed broadcast CANNOT be recomputed: a
+# returned DataFrame whose plan reads it fails if executed again after
+# ``release_persisted()`` — the same consume-then-release contract as
+# ``checkpoint_truncate``.
+_BROADCASTS: list[Broadcast] = []
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -25,6 +32,12 @@ def track_persist(df: DataFrame) -> DataFrame:
     df.persist()
     _TRACKED.append(df)
     return df
+
+
+def track_broadcast(bc: Broadcast) -> Broadcast:
+    """Register a broadcast for ``destroy()`` in ``release_persisted()``."""
+    _BROADCASTS.append(bc)
+    return bc
 
 
 def checkpoint_truncate(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -77,7 +90,8 @@ def release_checkpoint(df: DataFrame) -> None:
 
 
 def release_persisted() -> int:
-    """Unpersist every operator-cached frame; returns how many were held."""
+    """Unpersist every operator-cached frame and destroy every tracked
+    broadcast; returns how many frames were held."""
     n = len(_TRACKED)
     for df in _TRACKED:
         try:
@@ -86,6 +100,12 @@ def release_persisted() -> int:
             pass  # session already stopped
         release_checkpoint(df)
     _TRACKED.clear()
+    for bc in _BROADCASTS:
+        try:
+            bc.destroy()
+        except Exception:
+            pass  # session already stopped
+    _BROADCASTS.clear()
     return n
 
 

@@ -5483,8 +5483,9 @@ def lx_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionings, and retries — the determinism float k-means cannot
     offer and the reason this pair can carry a DuckDB hash oracle at
     all (the oracle unrolls the identical recurrence). Per round: ONE
-    scan, k x 64 int64 partial sums per task across the shuffle, k
-    collected rows, next round's centroids broadcast as literals —
+    map-only pass and one job — each task emits <= k int64 (cid, n,
+    s[64]) partial-sum rows, the driver reduces them with Python ints,
+    and the next round's centroids ride the UDF closure; no shuffle and
     no lineage growth (iterative-op discipline). Output: per-cluster
     size, exact inertia, first 4 centroid components."""
     from pydatalake_gen2_spark.operators import kmeans

@@ -1470,3 +1470,114 @@ def test_crm_single_scan_generator_matches_legacy_union(spark, sf_dir):
     assert legacy.exceptAll(new).count() == 0
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
+
+
+def _lloyd_reference(pts, cents, iters):
+    """Plain-Python exact Lloyd: first-minimum argmin (smallest cid on a
+    distance tie), floor-mean update, empty clusters keep their centroid."""
+    def nearest(q, cs):
+        d = [sum((a - b) ** 2 for a, b in zip(q, c)) for c in cs]
+        return d.index(min(d))
+
+    history = []
+    for _ in range(iters):
+        k, dim = len(cents), len(cents[0])
+        n, s = [0] * k, [[0] * dim for _ in range(k)]
+        for q in pts.values():
+            j = nearest(q, cents)
+            n[j] += 1
+            s[j] = [a + b for a, b in zip(s[j], q)]
+        cents = [
+            [t // n[j] for t in s[j]] if n[j] else list(cents[j])
+            for j in range(k)
+        ]
+        history.append(cents)
+    return history, {i: nearest(q, cents) for i, q in pts.items()}
+
+
+def test_kmeans_fused_round_matches_python_lloyd(spark):
+    """The map-only Lloyd round must equal a plain Python Lloyd over the
+    collected points, bit for bit, on adversarial inputs: duplicate
+    vectors, exact distance ties (to the smallest cid), a centroid that
+    wins no point (keeps its value), negative sums (floor, not trunc),
+    more partitions than rows (empty partitions), and k == row count."""
+    import random
+
+    from pydatalake_gen2_spark.operators import kmeans
+
+    planted = {
+        0: [0, 0, 0], 1: [0, 0, 0],  # duplicates -> seeds cids 0 and 1 equal
+        2: [2, 0, 0], 3: [1, 0, 0], 6: [1, 0, 0],  # 3, 6 tie between 0 and 2
+        4: [-3, 5, -7], 5: [-4, 4, -8], 7: [9, -1, 2],
+    }
+    rng = random.Random(7)
+    noisy = {i: [rng.randint(-1, 1) for _ in range(3)] for i in range(16)}
+    cases = [(planted, 3), (planted, len(planted)), (noisy, 5)]
+    for pts, k in cases:
+        dim = len(next(iter(pts.values())))
+        init = [pts[i] for i in sorted(pts)[:k]]
+        want_hist, want_cid = _lloyd_reference(pts, init, iters=2)
+        rows = sorted(pts.items())
+        for nparts in (3, len(pts) + 3):
+            df = spark.createDataFrame(
+                rows, "vec_id BIGINT, q ARRAY<BIGINT>"
+            ).repartition(nparts)
+            cents = init
+            for want in want_hist:
+                cents = kmeans.update(df, cents, dim)
+                assert cents == want, (k, nparts)
+            assigned = kmeans.assign(df, cents).collect()
+            assert {r["vec_id"]: r["cid"] for r in assigned} == want_cid, (k, nparts)
+    # the planted seeds really exercise the edge cases: ids 3 and 6 are
+    # equidistant from all three seeds, seed 1 (a copy of seed 0) wins no
+    # point and keeps its value, and cluster 0's mean is negative-floored
+    seeds = [planted[i] for i in range(3)]
+    assert len({sum((a - b) ** 2 for a, b in zip(planted[3], c)) for c in seeds}) == 1
+    hist, _ = _lloyd_reference(planted, seeds, 1)
+    assert hist[0][1] == planted[1]
+    assert hist[0][0] == [-5 // 6, 9 // 6, -15 // 6] == [-1, 1, -3]
+
+
+def test_lsh_topk_broadcast_destroyed_on_release(spark, sf_dir):
+    """lsh_topk's small path broadcasts the id-sorted matrix; after the
+    result is consumed, release_persisted() must destroy it."""
+    from pydatalake_gen2_spark.operators import similarity, util
+
+    util.release_persisted()
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    similarity.lsh_topk(emb, k=3).collect()
+    held = list(util._BROADCASTS)
+    assert len(held) == 1
+    util.release_persisted()
+    assert util._BROADCASTS == []
+    assert not held[0]._jbroadcast.isValid()
+
+
+def test_pair_cos_lookup_rejects_absent_id():
+    """The broadcast-matrix scorer must raise on an id the matrix does not
+    hold instead of gathering a neighbour's vector."""
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from pydatalake_gen2_spark.operators.similarity import _pair_cos_lookup_arrow
+
+    bc = SimpleNamespace(value=(
+        np.array([10, 20, 30], dtype=np.int64),
+        np.array([[1, 0], [0, 1], [1, 1]], dtype=np.float32),
+    ))
+    score = _pair_cos_lookup_arrow(bc, dim=2)
+
+    def batch(qids, ids):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(qids, pa.int64()), pa.array(ids, pa.int64())],
+            names=["query_id", "vec_id"],
+        )
+
+    out = next(score(iter([batch([10, 30], [20, 10])])))
+    assert out.column("cos").to_pylist() == [0.0, 1 / np.sqrt(2)]
+    for qids, ids in (([10], [25]), ([15], [20]), ([10], [99]), ([5], [10])):
+        with pytest.raises(KeyError, match="absent"):
+            next(score(iter([batch(qids, ids)])))

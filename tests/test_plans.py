@@ -679,8 +679,10 @@ def test_kmeans_assignment_is_map_only_arrow(spark, sf_dir):
     """lx_kmeans' assignment stage must be MAP-ONLY — no join, no
     shuffle — with the codebook in an Arrow pandas-UDF closure (ONE
     vectorized ArrowEvalPython, never row-Python, never per-centroid
-    literal trees whose codegen recompiles every Lloyd round). The only
-    shuffle per round is the k x dim partial-sum aggregate."""
+    literal trees whose codegen recompiles every Lloyd round). A whole
+    Lloyd round (``kmeans.update``) is one map-only pass too: exactly 1
+    job and 1 stage, 0 shuffle bytes — the per-task partial sums reach
+    the driver through the collect, not an exchange."""
     from pydatalake_gen2_spark.operators import kmeans
     from pydatalake_gen2_spark.registry import ensure_views
 
@@ -695,6 +697,23 @@ def test_kmeans_assignment_is_map_only_arrow(spark, sf_dir):
     # formatted explain mentions each node twice (tree line + details)
     assert 1 <= plan.count("ArrowEvalPython") <= 2, plan
     assert "BatchEvalPython" not in plan, plan
+
+    sc = spark.sparkContext
+    group = "test-kmeans-update"
+    sc.setJobGroup(group, "one fused Lloyd round")
+    try:
+        kmeans.update(pts, cents, dim=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    stages = list(sc.statusTracker().getJobInfo(jobs[0]).stageIds)
+    assert len(stages) == 1, stages
+    sd = jsc.statusStore().lastStageAttempt(stages[0])
+    assert sd.shuffleReadBytes() == 0 and sd.shuffleWriteBytes() == 0
 
 
 def test_s44_cbo_column_stats_flip_join_to_broadcast(spark, sf_dir):

@@ -12,6 +12,10 @@ Confs chosen for oracle parity and scale-out design:
   initialPartitionNum); expose it as an argument.
 - Arrow enabled: every pandas_udf / applyInPandas transfers via Arrow
   batches instead of pickled rows.
+- ``spark.driver.memory``: ``SPARK_DRIVER_MEM`` if set, else ~60% of the
+  host's RAM in whole GB (``default_driver_memory``). In local mode the
+  driver JVM holds every executor too; the rest of the host is left to
+  the Python workers and the OS.
 """
 
 from __future__ import annotations
@@ -19,6 +23,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """60% of ``MemTotal`` in ``meminfo``, floored to whole GB (at least
+    ``1g``); where that file is absent, of the physical pages sysconf
+    reports."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        total = kb * 1024
+    except (OSError, StopIteration):
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(0.6 * total / 2**30))}g"
 
 
 def get_spark(
@@ -42,7 +59,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Write TIMESTAMP_MICROS, not legacy INT96: INT96 columns carry NO

@@ -34,9 +34,22 @@ commit files, not a mutable pointer):
     the crash left. Proven by
     tests/test_lake.py::test_commit_race_exactly_one_winner.
 
+Manifest fields: ``version``, ``commit_id``, ``committed_at_us``, the data
+dirs (``dir`` for a full snapshot, ``dirs`` for an append chain or a
+clone), ``cloned_from`` on a clone, and ``schema`` — the Spark schema JSON
+of the data. ``schema`` is written ONLY when every dir in the version has
+exactly that schema: a full ``commit``/``optimize``, an ``append_commit``
+whose prior manifest carries the identical ``schema`` (or that has no
+prior), and a ``clone_from`` whose source manifest carries one. Any other
+manifest (an add-column append, a legacy manifest) omits it, and its
+reads infer the schema from parquet footers as before.
+
 Reader: `read(version=None)` resolves the newest manifest, then scans ONE
 immutable snapshot dir — a concurrent commit can't tear a running query;
-`read(version=k)` time-travels to any retained snapshot. At 100 TB the
+`read(version=k)` time-travels to any retained snapshot. A manifest that
+carries ``schema`` is scanned with it as the declared schema, so resolving
+a read, a time travel or a change read starts no Spark job: the dirs are
+immutable, so the schema recorded at commit cannot drift. At 100 TB the
 listing touches only the handful of manifest files at the table root
 (snapshot dirs are listed by Spark's own file index per read), and
 `expire(keep_last)` bounds retention.
@@ -48,9 +61,11 @@ import json
 import re
 import time
 import uuid
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pydatalake_gen2_spark.sources.lake import LakeCatalog
 
@@ -70,6 +85,18 @@ _HWM_RE = re.compile(r"^_hwm\.(\d{8})$")
 # older than claim_wait_s but younger than this can be a live writer's
 # slow snapshot write (r10 ADVICE #1).
 _VACUUM_MIN_AGE_S = 3600.0
+
+
+def _dirs(ref: dict) -> list[str]:
+    """A parsed manifest's data dirs (full snapshot or cumulative set)."""
+    return ref["dirs"] if "dirs" in ref else [ref["dir"]]
+
+
+@lru_cache(maxsize=64)
+def _struct(schema_json: str) -> StructType:
+    """A manifest's ``schema`` parsed once: manifests are immutable, so
+    the JSON text is a sound key for every read of every version."""
+    return StructType.fromJson(json.loads(schema_json))
 
 
 class VersionedTable:
@@ -181,21 +208,26 @@ class VersionedTable:
         self._manifest_cache[key] = ref
         return ref
 
-    def versions(self) -> list[int]:
-        """Committed versions = manifests that PARSE. A manifest mid-write
-        (the create→write→close window of the publishing writer, who holds
-        the version's claim file throughout) or truncated by a crash is
+    def _manifests(self) -> dict[int, dict]:
+        """Committed version → parsed manifest, from ONE listing (each
+        manifest parsed through the cache). A manifest mid-write (the
+        create→write→close window of the publishing writer, who holds the
+        version's claim file throughout) or truncated by a crash is
         skipped — readers see the previous table state, never a torn one;
         a crashed writer's remnant is reclaimed by vacuum_orphans."""
-        out = []
+        out = {}
         for p in self._cat.list_paths(""):
             m = _MANIFEST_RE.match(p.name)
             if not m:
                 continue
-            if self._parse_manifest(p.name, p.modification_time, p.length) is None:
-                continue
-            out.append(int(m.group(1)))
-        return sorted(out)
+            ref = self._parse_manifest(p.name, p.modification_time, p.length)
+            if ref is not None:
+                out[int(m.group(1))] = ref
+        return out
+
+    def versions(self) -> list[int]:
+        """Committed versions = manifests that PARSE (see _manifests)."""
+        return sorted(self._manifests())
 
     def current_version(self) -> int:
         vs = self.versions()
@@ -267,13 +299,16 @@ class VersionedTable:
             # The empty-log resolution goes through the high-water marker
             # (_next_version): after a full expire the next slot is
             # hwm+1, never a recycled 1.
-            vs = self.versions()
+            refs = self._manifests()
+            vs = sorted(refs)
             if (vs[-1] if vs else self._high_water()) != v - 1:
                 self._cat.delete_path(self._claim_name(v))
                 return False
-            # prior dirs are resolved HERE, under the claim, so an append
-            # always extends the winner's cumulative set, never a stale one
-            prior = self._manifest_dirs(vs[-1]) if (append and vs) else None
+            # the prior manifest is resolved HERE, under the claim, so an
+            # append always extends the winner's cumulative set, never a
+            # stale one
+            prior = refs[vs[-1]] if (append and vs) else None
+            schema = df.schema.json()
             d = f"_v{v:08d}"
             df.write.mode("overwrite").parquet(self._resolve(d))
             # commit_id: per-commit UUID — the content-level discriminator
@@ -294,9 +329,14 @@ class VersionedTable:
                 ),
             }
             if append:
-                manifest["dirs"] = (prior or []) + [d]
+                manifest["dirs"] = (_dirs(prior) if prior else []) + [d]
             else:
                 manifest["dir"] = d
+            # recorded only if EVERY dir of v has exactly this schema: an
+            # append onto a chain without it (evolved or legacy) or with a
+            # different one omits it, and its reads keep inferring
+            if prior is None or prior.get("schema") == schema:
+                manifest["schema"] = schema
             if not self._cat.create_bytes_atomic(
                 self._manifest_name(v), json.dumps(manifest).encode()
             ):
@@ -497,14 +537,14 @@ class VersionedTable:
             )
         return best
 
-    def _manifest_dirs(self, version: int) -> list[str]:
+    def _manifest(self, version: int) -> dict:
         m = self._parse_manifest(self._manifest_name(version))
         if m is None:
             raise ValueError(
                 f"manifest for version {version} under {self.root} is "
                 f"missing or unparseable"
             )
-        return m["dirs"] if "dirs" in m else [m["dir"]]
+        return m
 
     @staticmethod
     def _is_external(d: str) -> bool:
@@ -533,21 +573,37 @@ class VersionedTable:
         snapshot's data directories (Spark's parquet mergeSchema) — the
         ADD-COLUMN schema-evolution read: generations written before a
         column existed surface it as NULL, exactly like Delta/Iceberg
-        evolved-schema reads. Off by default: merging costs a footer
-        pass per file and same-schema tables never need it."""
+        evolved-schema reads. Off by default.
+
+        Which reads pay a footer pass: only versions whose manifest has
+        no ``schema`` (an add-column append chain, a legacy manifest).
+        Those infer the schema with one Spark job — from one footer, or
+        from every file's footer under ``merge_schema=True``. A version
+        WITH ``schema`` has one schema across all its dirs, so both
+        settings read it from the manifest and start no job."""
         if version is not None and as_of_us is not None:
             raise ValueError("pass version OR as_of_us, not both")
         if as_of_us is not None:
             version = self.version_as_of(as_of_us)
-        vs = self.versions()
-        if not vs:
+        refs = self._manifests()
+        if not refs:
             raise ValueError(f"no committed versions under {self.root}")
-        v = vs[-1] if version is None else version
-        if v not in vs:
-            raise ValueError(f"version {v} not in retained versions {vs}")
-        dirs = self._manifest_dirs(v)
+        v = max(refs) if version is None else version
+        if v not in refs:
+            raise ValueError(
+                f"version {v} not in retained versions {sorted(refs)}"
+            )
+        return self._scan(refs[v], _dirs(refs[v]), merge_schema)
+
+    def _scan(
+        self, ref: dict, dirs: list[str], merge_schema: bool = False
+    ) -> DataFrame:
+        """Scan ``dirs`` of the version ``ref`` describes: with its
+        recorded schema when it has one (no Spark job), else inferred."""
         reader = self.spark.read
-        if merge_schema:
+        if "schema" in ref:
+            reader = reader.schema(_struct(ref["schema"]))
+        elif merge_schema:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*[self._resolve(d) for d in dirs])
 
@@ -563,7 +619,8 @@ class VersionedTable:
         is the one lifecycle coupling — same caveat as Delta shallow
         clones, documented not hidden)."""
         src_v = src.current_version() if version is None else version
-        dirs = [src._resolve(d) for d in src._manifest_dirs(src_v)]
+        src_ref = src._manifest(src_v)
+        dirs = [src._resolve(d) for d in _dirs(src_ref)]
         for _ in range(5):  # same claim-first commit point as commit()
             v = self._next_version()
             if not self._cat.create_bytes_atomic(
@@ -590,6 +647,8 @@ class VersionedTable:
                     "dirs": dirs,
                     "cloned_from": src.root,
                 }
+                if "schema" in src_ref:  # the clone reads the same dirs
+                    manifest["schema"] = src_ref["schema"]
                 if not self._cat.create_bytes_atomic(
                     self._manifest_name(v), json.dumps(manifest).encode()
                 ):
@@ -612,15 +671,19 @@ class VersionedTable:
         read. File-level CDC for append-only chains (J23's snapshot diff
         is the row-level sibling for rewrites): an incremental consumer
         reads O(new data), never O(table)."""
-        vs = self.versions()
-        to_v = vs[-1] if to is None else to
-        if since not in vs or to_v not in vs:
-            raise ValueError(f"versions ({since}, {to_v}) not all in {vs}")
-        old = set(self._manifest_dirs(since))
-        new_dirs = [d for d in self._manifest_dirs(to_v) if d not in old]
+        refs = self._manifests()
+        to_v = max(refs, default=0) if to is None else to
+        if since not in refs or to_v not in refs:
+            raise ValueError(
+                f"versions ({since}, {to_v}) not all in {sorted(refs)}"
+            )
+        # the new dirs are a subset of to_v's, so to_v's schema covers them
+        to_ref = refs[to_v]
+        old = set(_dirs(refs[since]))
+        new_dirs = [d for d in _dirs(to_ref) if d not in old]
         if not new_dirs:
-            return self.read(to_v).limit(0)
-        return self.spark.read.parquet(*[self._resolve(d) for d in new_dirs])
+            return self._scan(to_ref, _dirs(to_ref)).limit(0)
+        return self._scan(to_ref, new_dirs)
 
     def diff_changes(
         self, v_from: int, v_to: int, key_cols: list[str]
@@ -713,7 +776,8 @@ class VersionedTable:
         manifest's dir set (the same liveness rule vacuum_orphans uses;
         without it, expiring any prefix of an append chain would delete
         dirs the CURRENT table still reads)."""
-        vs = self.versions()
+        refs = self._manifests()
+        vs = sorted(refs)
         drop = vs[:-keep_last] if keep_last > 0 else list(vs)
         dropped = set(drop)
         live: set[str] = set()
@@ -722,7 +786,7 @@ class VersionedTable:
             # dir names come from the manifests themselves (not a
             # reconstructed _v{v} pattern) so writer_id-tagged dirs from
             # multi-writer commits expire correctly too.
-            (live if v not in dropped else drop_dirs).update(self._manifest_dirs(v))
+            (live if v not in dropped else drop_dirs).update(_dirs(refs[v]))
         if drop and len(drop) == len(vs):
             # Retiring the LAST manifest empties the log — publish the
             # high-water marker FIRST so no commit can claim a retired
@@ -779,7 +843,7 @@ class VersionedTable:
                     # letting it brick the version slot forever
                     continue
                 live.add(p.name)
-                live.update(ref["dirs"] if "dirs" in ref else [ref["dir"]])
+                live.update(_dirs(ref))
         cutoff_ms = (time.time() - min_age_s) * 1000.0
         orphans = sorted(
             p.name

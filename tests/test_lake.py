@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import tempfile
 import time
+import uuid
 
 import pytest
 
@@ -550,3 +551,218 @@ def test_cdf_reader_fails_loud_on_missing_predecessor(spark):
     # still a loud error, the honest answer)
     with _pytest.raises(ValueError, match="predecessor manifest"):
         list(_VersionChangesStreamReader(root, ["k"], 2).read({"v": 2})[0])
+
+
+# ------------------------------------- manifest-recorded snapshot schema
+
+
+def _all_types_frame(spark, lo: int, hi: int):
+    """Rows lo..hi-1 over every parquet-writable leaf family plus nested
+    types; ``i`` is declared non-nullable at the source."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("i", T.IntegerType(), False),
+        T.StructField("l", T.LongType()),
+        T.StructField("sh", T.ShortType()),
+        T.StructField("b", T.ByteType()),
+        T.StructField("f", T.FloatType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("dec", T.DecimalType(12, 2)),
+        T.StructField("s", T.StringType()),
+        T.StructField("bin", T.BinaryType()),
+        T.StructField("bo", T.BooleanType()),
+        T.StructField("dt", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("arr", T.ArrayType(T.LongType(), False)),
+        T.StructField("m", T.MapType(T.StringType(), T.DoubleType())),
+        T.StructField("st", T.StructType([
+            T.StructField("x", T.IntegerType(), False),
+            T.StructField("inner", T.StructType([
+                T.StructField("y", T.StringType()),
+            ])),
+        ])),
+    ])
+    rows = [
+        (
+            i, 10**12 + i, i % 300, i % 100, i / 4, i / 3,
+            Decimal(i * 101) / 100, f"s{i}" if i % 5 else None,
+            bytes([i % 256, 7]), i % 2 == 0, dt.date(2024, 1, 1 + i % 28),
+            dt.datetime(2024, 2, 1, i % 24, 30, 15, 123456),
+            dt.datetime(2024, 3, 1, 12, i % 60),
+            [i, i + 1], {"k": i / 2} if i % 3 else None,
+            (i, ("y" if i % 4 else None,)),
+        )
+        for i in range(lo, hi)
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+def _inferred(vt, version: int, merge: bool = False):
+    """The same version read the way a manifest WITHOUT ``schema`` is:
+    Spark infers from parquet footers."""
+    from pydatalake_gen2_spark.sources.versioned import _dirs
+
+    reader = vt.spark.read
+    if merge:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(
+        *[vt._resolve(d) for d in _dirs(vt._manifest(version))]
+    )
+
+
+def _rows(df, key: str):
+    return sorted(df.collect(), key=lambda r: r[key])
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while building (not running) a read."""
+    sc = spark.sparkContext
+    group = f"test-vt-resolve-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "resolve a VersionedTable read")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _strip_schema(vt, root: str, version: int) -> None:
+    """Rewrite a manifest on disk without ``schema`` (a legacy manifest)."""
+    import json as _json
+    import os as _os
+
+    path = _os.path.join(root, vt._manifest_name(version))
+    m = _json.loads(open(path, "rb").read())
+    del m["schema"]
+    open(path, "w").write(_json.dumps(m))
+    vt._manifest_cache.clear()
+
+
+def test_manifest_schema_matches_inferred_schema_and_rows(spark):
+    """A recorded ``schema`` must read back exactly what footer inference
+    gives — every type family, nested types, and a non-nullable source
+    column (Spark reads every file column as nullable either way) — for
+    a single-dir commit and a multi-dir append chain."""
+    from pydatalake_gen2_spark.sources.versioned import VersionedTable
+
+    root = tempfile.mkdtemp(prefix="vt_schema_")
+    vt = VersionedTable(spark, root)
+    v1 = vt.commit(_all_types_frame(spark, 0, 6))
+    vt.append_commit(_all_types_frame(spark, 6, 9))
+    v3 = vt.append_commit(_all_types_frame(spark, 9, 13))
+    assert len(vt._manifest(v3)["dirs"]) == 3
+    for v in (v1, v3):
+        assert "schema" in vt._manifest(v)
+        got, ref = vt.read(v), _inferred(vt, v)
+        assert got.schema == ref.schema
+        assert _rows(got, "i") == _rows(ref, "i")
+        assert vt.read(v, merge_schema=True).schema == ref.schema
+    assert all(f.nullable for f in vt.read(v1).schema.fields)
+    ch = vt.read_changes(since=v1)
+    assert ch.schema == _inferred(vt, v3).schema
+    assert [r["i"] for r in _rows(ch, "i")] == list(range(6, 13))
+
+
+def test_add_column_append_and_legacy_manifest_keep_inference(spark):
+    """Fallbacks: (a) an append that adds a column writes no ``schema``
+    (nor does any later append on that chain), and its reads, with and
+    without merge_schema, equal the inference path; a full commit records
+    it again. (b) a manifest with ``schema`` stripped on disk still reads
+    through inference."""
+    from pyspark.sql import functions as F
+
+    from pydatalake_gen2_spark.sources.versioned import VersionedTable
+
+    root = tempfile.mkdtemp(prefix="vt_evolve_")
+    vt = VersionedTable(spark, root)
+    base = spark.range(0, 6).withColumnRenamed("id", "k")
+    vt.commit(base.withColumn("a", F.col("k") * 2))
+    v2 = vt.append_commit(
+        spark.range(6, 9).withColumnRenamed("id", "k")
+        .withColumn("a", F.col("k") * 2)
+        .withColumn("extra", F.concat(F.lit("e"), F.col("k").cast("string")))
+    )
+    v3 = vt.append_commit(
+        spark.range(9, 11).withColumnRenamed("id", "k")
+        .withColumn("a", F.col("k") * 2)
+        .withColumn("extra", F.lit("z"))
+    )
+    for v in (v2, v3):
+        assert "schema" not in vt._manifest(v)
+        for merge in (False, True):
+            got, ref = vt.read(v, merge_schema=merge), _inferred(vt, v, merge)
+            assert got.schema == ref.schema
+            assert _rows(got, "k") == _rows(ref, "k")
+    evolved = vt.read(v3, merge_schema=True)
+    assert evolved.columns == ["k", "a", "extra"]
+    assert evolved.filter("extra IS NULL").count() == 6
+    assert sorted(r["k"] for r in vt.read_changes(since=v2).collect()) == [9, 10]
+    v4 = vt.commit(evolved)  # a full snapshot: one dir, one schema
+    assert vt._manifest(v4)["schema"] == evolved.schema.json()
+
+    # (b) legacy manifest: strip the key on disk; the read infers
+    v5 = vt.commit(base)
+    expect = _rows(vt.read(v5), "k")
+    _strip_schema(vt, root, v5)
+    assert "schema" not in vt._manifest(v5)
+    assert vt.read(v5).schema == _inferred(vt, v5).schema
+    assert _rows(vt.read(v5), "k") == expect
+    # an append onto the legacy manifest cannot vouch for its dir
+    v6 = vt.append_commit(spark.range(6, 8).withColumnRenamed("id", "k"))
+    assert "schema" not in vt._manifest(v6)
+    assert vt.read(v6).count() == 8
+
+
+def test_versioned_reads_start_no_spark_job(spark):
+    """Latest, time-travel, change and shallow-clone reads resolve from the
+    manifest alone: 0 Spark jobs each. The same read of a manifest without
+    ``schema`` starts the footer-inference job, so the gate can fail."""
+    from pydatalake_gen2_spark.sources.versioned import VersionedTable
+
+    root = tempfile.mkdtemp(prefix="vt_jobs_")
+    vt = VersionedTable(spark, root)
+    k = vt.commit(spark.range(0, 5).withColumnRenamed("id", "k"))
+    vt.append_commit(spark.range(5, 9).withColumnRenamed("id", "k"))
+    vt.append_commit(spark.range(9, 12).withColumnRenamed("id", "k"))
+    clone = VersionedTable(spark, tempfile.mkdtemp(prefix="vt_jobs_clone_"))
+    clone.clone_from(vt)
+    assert _jobs_started(spark, lambda: vt.read()) == 0
+    assert _jobs_started(spark, lambda: vt.read(version=k)) == 0
+    assert _jobs_started(spark, lambda: vt.read_changes(since=k)) == 0
+    assert _jobs_started(spark, lambda: clone.read()) == 0
+    assert vt.read_changes(since=k).count() == 7 and clone.read().count() == 12
+
+    _strip_schema(vt, root, k)
+    assert _jobs_started(spark, lambda: vt.read(version=k)) >= 1
+
+
+def test_clone_copies_source_schema(spark):
+    """clone_from carries the source version's ``schema`` into the clone
+    manifest (the clone reads the same dirs), and carries none when the
+    source version has none."""
+    from pydatalake_gen2_spark.sources.versioned import VersionedTable
+
+    root = tempfile.mkdtemp(prefix="vt_clsrc_")
+    src = VersionedTable(spark, root)
+    v1 = src.commit(spark.range(4).withColumnRenamed("id", "k"))
+    clone = VersionedTable(spark, tempfile.mkdtemp(prefix="vt_cl_"))
+    c1 = clone.clone_from(src, v1)
+    assert clone._manifest(c1)["schema"] == src._manifest(v1)["schema"]
+    assert clone.read().schema == src.read().schema
+    # the clone's own appends extend the recorded schema
+    c2 = clone.append_commit(spark.range(4, 6).withColumnRenamed("id", "k"))
+    assert clone._manifest(c2)["schema"] == src._manifest(v1)["schema"]
+    assert clone.read().count() == 6 and src.read().count() == 4
+
+    _strip_schema(src, root, v1)
+    bare = VersionedTable(spark, tempfile.mkdtemp(prefix="vt_cl_bare_"))
+    b1 = bare.clone_from(src, v1)
+    assert "schema" not in bare._manifest(b1)
+    assert bare.read().count() == 4

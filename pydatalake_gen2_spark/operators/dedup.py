@@ -463,36 +463,24 @@ def connected_components(
     localCheckpoint (util.checkpoint_truncate), not a plain persist:
     the round recurrence references the previous frame 4x, so without
     truncation the analyzed logical plan grows 4^k and the DRIVER OOMs
-    on long chains even though the data is tiny. Superseded rounds'
-    blocks are freed immediately (util.release_checkpoint). The returned
-    frame is the final checkpointed state, registered via util.track;
-    callers release with util.release_persisted() AFTER fully consuming
-    (a truncated frame does not recompute).
+    on long chains even though the data is tiny. A util.RoundState block
+    owns the rounds: a superseded round's blocks are freed immediately, a
+    failed job or non-convergence frees every held round, and the final
+    checkpointed state passes to the caller, who releases it with
+    util.release_persisted() AFTER fully consuming (a truncated frame
+    does not recompute).
 
     Output: (id BIGINT, component BIGINT).
     """
-    from pydatalake_gen2_spark.operators.util import (
-        checkpoint_truncate,
-        release_checkpoint,
-        track,
-    )
+    from pydatalake_gen2_spark.operators.util import RoundState, undirected
 
-    # Undirected closure of the edge list + self-loops via init labels.
-    # sym feeds every round's neighbor join — persist once (static plan,
-    # safe to recompute, so plain persist is right here).
-    e = edges.select(
-        F.col(src_col).cast("bigint").alias("s"), F.col(dst_col).cast("bigint").alias("d")
-    )
-    sym = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .persist()
-    )
-    nodes = sym.select(F.col("s").alias("id")).distinct()
-    labels = None
-    converged = False
-    try:
-        labels = checkpoint_truncate(nodes.withColumn("lbl", F.col("id")))
+    with RoundState() as rs:
+        # Undirected closure of the edge list + self-loops via init labels.
+        # sym feeds every round's neighbor join — persist once (static
+        # plan, safe to recompute, so plain persist is right here).
+        sym = rs.persist(undirected(edges, src_col, dst_col))
+        nodes = sym.select(F.col("s").alias("id")).distinct()
+        labels = rs.checkpoint(nodes.withColumn("lbl", F.col("id")))
         for _ in range(max_iter):
             cur = labels.select("id", "lbl")
             # neighbor labels: for each edge (s,d), s can adopt d's label.
@@ -521,7 +509,7 @@ def connected_components(
                     F.lit(None).cast("bigint").alias("old"),
                 )
             )
-            new_labels = checkpoint_truncate(
+            new_labels = rs.checkpoint(
                 cur.withColumn("old", F.col("lbl"))
                 .unionByName(nbr)
                 .unionByName(hop)
@@ -529,34 +517,19 @@ def connected_components(
                 .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old")),
                 eager=False,
             )
-            try:
-                # ONE job: the full (not limit-1) count materializes every
-                # partition of the lazy checkpoint AND yields the
-                # convergence certificate (see checkpoint_truncate note).
-                changed = new_labels.filter(F.col("lbl") != F.col("old")).count()
-            except Exception:
-                release_checkpoint(new_labels)  # the round that won't be adopted
-                raise
-            release_checkpoint(labels)  # superseded round: free blocks now
+            # ONE job: the full (not limit-1) count materializes every
+            # partition of the lazy checkpoint AND yields the convergence
+            # certificate (see checkpoint_truncate note).
+            changed = new_labels.filter(F.col("lbl") != F.col("old")).count()
+            rs.drop(labels)  # superseded round: free blocks now
             labels = new_labels
             if changed == 0:
-                converged = True
                 break
-    except Exception:
-        if labels is not None:
-            release_checkpoint(labels)  # free the live round on job failure
-        raise
-    finally:
-        sym.unpersist()
-    if not converged:
-        release_checkpoint(labels)
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds "
-            "(graph diameter > 2^max_iter is implausible — investigate)"
-        )
-    # hand lifecycle of the final (already-materialized) state to the caller:
-    # release_persisted() frees the checkpoint blocks via release_checkpoint.
-    track(labels)
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge within {max_iter} rounds "
+                "(graph diameter > 2^max_iter is implausible — investigate)"
+            )
     return labels.select(F.col("id"), F.col("lbl").alias("component"))
 
 

@@ -3,17 +3,20 @@
 Engine parity note: the reference (client.py) has no graph surface; these
 extend the declared engine layer the same way the L* pipeline ops do
 (SURVEY.md 2B.14+). All loops follow the plan-truncating checkpoint
-discipline established by operators/dedup.connected_components: each
-round's state materializes through util.checkpoint_truncate so the
-analyzed plan stays constant-size, superseded rounds' blocks are freed
-immediately, and the final state's lifecycle belongs to the caller via
-util.release_persisted().
+discipline established by operators/dedup.connected_components, and all
+hold their state through one util.RoundState block: each round
+materializes through ``checkpoint`` so the analyzed plan stays
+constant-size, a superseded round is ``drop``ped at once, a failed job or
+non-convergence frees every held round, and on success the final state's
+lifecycle belongs to the caller via util.release_persisted().
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pydatalake_gen2_spark.operators.util import RoundState, undirected
 
 
 def k_core(
@@ -41,21 +44,10 @@ def k_core(
     (see module docstring). Output: (node BIGINT, core_degree BIGINT) —
     every node in the k-core with its within-core degree.
     """
-    from pydatalake_gen2_spark.operators.util import (
-        checkpoint_truncate,
-        release_checkpoint,
-        track,
-    )
-
-    e = edges.select(
-        F.col(src_col).cast("bigint").alias("s"),
-        F.col(dst_col).cast("bigint").alias("d"),
-    )
-    alive = checkpoint_truncate(
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
-    )
-    converged = False
-    try:
+    with RoundState() as rs:
+        # lazy checkpoint + full count: one job per round materializes the
+        # round and yields its edge count (the fixpoint certificate)
+        alive = rs.checkpoint(undirected(edges, src_col, dst_col), eager=False)
         prev = alive.count()
         for _ in range(max_iter):
             keep = (
@@ -64,33 +56,22 @@ def k_core(
                 .filter(F.col("deg") >= k)
                 .select(F.col("s").alias("n"))
             )
-            new_alive = checkpoint_truncate(
+            new_alive = rs.checkpoint(
                 alive.join(keep, alive.s == keep.n, "left_semi").join(
                     keep.withColumnRenamed("n", "m"),
                     F.col("d") == F.col("m"),
                     "left_semi",
-                )
+                ),
+                eager=False,
             )
-            try:
-                cur = new_alive.count()
-            except Exception:
-                release_checkpoint(new_alive)  # the round that won't be adopted
-                raise
-            release_checkpoint(alive)
+            cur = new_alive.count()
+            rs.drop(alive)
             alive = new_alive
             if cur == prev:
-                converged = True
                 break
             prev = cur
-    except Exception:
-        # job failure mid-loop: free the live round's blocks (VERDICT-style
-        # leak otherwise — a failing sweep would accumulate dead state)
-        release_checkpoint(alive)
-        raise
-    if not converged:
-        release_checkpoint(alive)
-        raise RuntimeError(f"k_core did not reach a fixpoint within {max_iter} rounds")
-    track(alive)
+        else:
+            raise RuntimeError(f"k_core did not reach a fixpoint within {max_iter} rounds")
     return alive.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("core_degree")
     )
@@ -124,71 +105,9 @@ def bfs_distances(
     frontier, read from the job that materializes the level (lazy
     checkpoint + full count — one driver job per round).
     """
-    from pydatalake_gen2_spark.operators.util import (
-        checkpoint_truncate,
-        release_checkpoint,
-        track,
+    return _frontier_bfs(
+        edges, seeds, ["node"], src_col, dst_col, seed_col, max_iter, "bfs_distances"
     )
-
-    e = edges.select(
-        F.col(src_col).cast("bigint").alias("s"),
-        F.col(dst_col).cast("bigint").alias("d"),
-    )
-    sym = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .persist()
-    )
-    levels: list[DataFrame] = []  # levels[r] = nodes first reached at depth r
-    converged = False
-    try:
-        levels.append(
-            checkpoint_truncate(
-                seeds.select(F.col(seed_col).cast("bigint").alias("node"))
-                .distinct()
-                .withColumn("dist", F.lit(0))
-            )
-        )
-        for _ in range(max_iter):
-            frontier = levels[-1]
-            relax = sym.join(frontier, sym.s == frontier.node).select(
-                F.col("d").alias("node"), (F.col("dist") + 1).alias("dist")
-            )
-            seen = levels[-1].select("node")
-            if len(levels) >= 2:
-                seen = seen.union(levels[-2].select("node"))
-            new_level = checkpoint_truncate(
-                relax.dropDuplicates(["node"]).join(
-                    seen, on=["node"], how="left_anti"
-                ),
-                eager=False,
-            )
-            try:
-                n_new = new_level.count()
-            except Exception:
-                release_checkpoint(new_level)  # the round that won't be adopted
-                raise
-            if n_new == 0:
-                release_checkpoint(new_level)
-                converged = True
-                break
-            levels.append(new_level)
-    except Exception:
-        for lv in levels:
-            release_checkpoint(lv)  # free live rounds on job failure
-        raise
-    finally:
-        sym.unpersist()
-    if not converged:
-        for lv in levels:
-            release_checkpoint(lv)
-        raise RuntimeError(f"bfs_distances did not converge within {max_iter} rounds")
-    dist = levels[0]
-    for lv in levels[1:]:
-        dist = dist.union(lv)
-    for lv in levels:
-        track(lv)
-    return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
 
 
 def label_propagation(
@@ -214,27 +133,12 @@ def label_propagation(
 
     Output: (node BIGINT, label BIGINT) — label = community id.
     """
-    from pydatalake_gen2_spark.operators.util import (
-        checkpoint_truncate,
-        release_checkpoint,
-        track,
-    )
-
-    e = edges.select(
-        F.col(src_col).cast("bigint").alias("s"),
-        F.col(dst_col).cast("bigint").alias("d"),
-    )
-    # persist (not checkpoint): a static recomputable plan — executor loss
-    # mid-loop recomputes it instead of failing the job (same choice as
-    # bfs_distances' `sym`)
-    und = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .persist()
-    )
-    labels = None
-    try:
-        labels = checkpoint_truncate(
+    with RoundState() as rs:
+        # persist (not checkpoint): a static recomputable plan — executor
+        # loss mid-loop recomputes it instead of failing the job (same
+        # choice as the BFS loop's edge list)
+        und = rs.persist(undirected(edges, src_col, dst_col))
+        labels = rs.checkpoint(
             und.select(F.col("s").alias("node")).distinct()
             .select("node", F.col("node").alias("label"))
         )
@@ -246,20 +150,14 @@ def label_propagation(
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
             # argmax by (cnt DESC, label ASC): min of (-cnt, label) struct
-            new_labels = checkpoint_truncate(
+            new_labels = rs.checkpoint(
                 votes.groupBy("n")
                 .agg(F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("label"))).alias("m"))
                 .select(F.col("n").alias("node"), F.col("m.label").alias("label"))
             )
-            release_checkpoint(labels)
+            rs.drop(labels)
             labels = new_labels
-    except Exception:
-        if labels is not None:
-            release_checkpoint(labels)
-        raise
-    finally:
-        und.unpersist()
-    return track(labels)
+    return labels
 
 
 def landmark_distances(
@@ -295,80 +193,61 @@ def landmark_distances(
     materializes the level (lazy checkpoint + full count — one driver
     job per round, the same fusion as connected_components).
     """
-    from pydatalake_gen2_spark.operators.util import (
-        checkpoint_truncate,
-        release_checkpoint,
-        track,
+    return _frontier_bfs(
+        edges, landmarks, ["node", "lm"], src_col, dst_col, lm_col, max_iter,
+        "landmark_distances",
     )
 
-    e = edges.select(
-        F.col(src_col).cast("bigint").alias("s"),
-        F.col(dst_col).cast("bigint").alias("d"),
-    )
-    sym = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .persist()
-    )
-    levels: list[DataFrame] = []  # levels[r] = pairs first reached at depth r
-    converged = False
-    try:
-        levels.append(
-            checkpoint_truncate(
-                landmarks.select(F.col(lm_col).cast("bigint").alias("node"))
-                .distinct()
-                .select(
-                    "node", F.col("node").alias("lm"), F.lit(0).alias("dist")
-                )
+
+def _frontier_bfs(
+    edges: DataFrame,
+    seeds: DataFrame,
+    keys: list[str],
+    src_col: str,
+    dst_col: str,
+    seed_col: str,
+    max_iter: int,
+    name: str,
+) -> DataFrame:
+    """The level-by-level BFS behind bfs_distances (``keys=["node"]``)
+    and landmark_distances (``keys=["node", "lm"]``, each seed its own
+    wave). Output: (*keys, dist BIGINT)."""
+    with RoundState() as rs:
+        sym = rs.persist(undirected(edges, src_col, dst_col))
+        seed = seeds.select(F.col(seed_col).cast("bigint").alias("node")).distinct()
+        # levels[r] = keys first reached at depth r
+        levels = [
+            rs.checkpoint(
+                seed.select(*(F.col("node").alias(k) for k in keys), F.lit(0).alias("dist"))
             )
-        )
+        ]
         for _ in range(max_iter):
             frontier = levels[-1]
             relax = sym.join(frontier, sym.s == frontier.node).select(
-                F.col("d").alias("node"), "lm", (F.col("dist") + 1).alias("dist")
+                F.col("d").alias("node"), *keys[1:], (F.col("dist") + 1).alias("dist")
             )
-            # Candidates of depth r can only collide with pairs settled at
+            # Candidates of depth r can only collide with keys settled at
             # depths r-1 / r-2 (an earlier-settled neighbour would have
             # pulled the frontier node below depth r-1) — anti-join against
             # those two levels only. dropDuplicates first: multiple paths
-            # produce identical rows, and keying its exchange on (node, lm)
+            # produce identical rows, and keying its exchange on the keys
             # lets the anti-join reuse the partitioning.
-            seen = levels[-1].select("node", "lm")
+            seen = levels[-1].select(*keys)
             if len(levels) >= 2:
-                seen = seen.union(levels[-2].select("node", "lm"))
-            new_level = checkpoint_truncate(
-                relax.dropDuplicates(["node", "lm"]).join(
-                    seen, on=["node", "lm"], how="left_anti"
-                ),
+                seen = seen.union(levels[-2].select(*keys))
+            new_level = rs.checkpoint(
+                relax.dropDuplicates(keys).join(seen, on=keys, how="left_anti"),
                 eager=False,
             )
-            try:
-                # ONE job: materializes every partition of the lazy
-                # checkpoint AND yields the empty-frontier certificate.
-                n_new = new_level.count()
-            except Exception:
-                release_checkpoint(new_level)
-                raise
-            if n_new == 0:
-                release_checkpoint(new_level)
-                converged = True
+            # ONE job: materializes every partition of the lazy checkpoint
+            # AND yields the empty-frontier certificate.
+            if new_level.count() == 0:
+                rs.drop(new_level)
                 break
             levels.append(new_level)
-    except Exception:
-        for lv in levels:
-            release_checkpoint(lv)
-        raise
-    finally:
-        sym.unpersist()
-    if not converged:
-        for lv in levels:
-            release_checkpoint(lv)
-        raise RuntimeError(
-            f"landmark_distances did not converge within {max_iter} rounds"
-        )
+        else:
+            raise RuntimeError(f"{name} did not converge within {max_iter} rounds")
     dist = levels[0]
     for lv in levels[1:]:
         dist = dist.union(lv)
-    for lv in levels:
-        track(lv)
-    return dist.select("node", "lm", F.col("dist").cast("bigint").alias("dist"))
+    return dist.select(*keys, F.col("dist").cast("bigint").alias("dist"))

@@ -4172,7 +4172,7 @@ def l66_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        from pydatalake_gen2_spark.operators.util import checkpoint_truncate
+        from pydatalake_gen2_spark.operators.util import checkpoint_truncate, track
 
         words = (
             words.crossJoin(F.broadcast(best))
@@ -4186,8 +4186,10 @@ def l66_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("w", "c", "s")
         )
         # checkpoint-truncate the per-round state so the unrolled lineage
-        # doesn't grow multiplicatively (iterative-operator discipline)
-        words = checkpoint_truncate(words)
+        # doesn't grow multiplicatively (iterative-operator discipline).
+        # Tracked, not dropped per round: the returned `merges` plan reads
+        # every round, so all are freed by release_persisted() after use.
+        words = track(checkpoint_truncate(words))
         stats = words.agg(
             F.sum(
                 F.col("c")

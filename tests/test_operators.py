@@ -989,38 +989,81 @@ def test_parquet_bloom_bytes_present(spark, tmp_path):
 def test_bfs_distances_match_python(spark, edges, seeds):
     """Hypothesis: distributed relaxation equals a textbook BFS from the
     seed set (only seeds that exist as graph nodes count; unreachable
-    nodes are absent from the output)."""
+    nodes are absent from the output), and landmark_distances equals one
+    such BFS per seed, keyed (node, lm)."""
     from collections import deque
 
-    from pydatalake_gen2_spark.operators.graph import bfs_distances
+    from pydatalake_gen2_spark.operators.graph import (
+        bfs_distances,
+        landmark_distances,
+    )
     from pydatalake_gen2_spark.operators.util import release_persisted
 
     adj: dict[int, set[int]] = {}
     for a, b in edges:
         adj.setdefault(a, set()).add(b)
         adj.setdefault(b, set()).add(a)
-    want: dict[int, int] = {}
-    q = deque()
-    for s in sorted(seeds):
-        if s in adj:
-            want[s] = 0
-            q.append(s)
-    while q:
-        n = q.popleft()
-        for m in adj[n]:
-            if m not in want:
-                want[m] = want[n] + 1
-                q.append(m)
+
+    def py_bfs(sources) -> dict[int, int]:
+        # seeds that are not graph nodes still get dist 0 (they are
+        # trivially at distance 0 from themselves)
+        want = {s: 0 for s in sources}
+        q = deque(sorted(sources))
+        while q:
+            n = q.popleft()
+            for m in adj.get(n, ()):
+                if m not in want:
+                    want[m] = want[n] + 1
+                    q.append(m)
+        return want
 
     df = spark.createDataFrame(edges, "id_a BIGINT, id_b BIGINT")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node BIGINT")
-    # seeds that are not graph nodes still get dist 0 (they are trivially
-    # at distance 0 from themselves) — mirror that in the expectation
     got = {r["node"]: r["dist"] for r in bfs_distances(df, sdf).collect()}
+    got_lm = {
+        (r["node"], r["lm"]): r["dist"]
+        for r in landmark_distances(df, sdf).collect()
+    }
     release_persisted()
-    for s in seeds:
-        want.setdefault(s, 0)
-    assert got == want
+    assert got == py_bfs(seeds)
+    assert got_lm == {
+        (n, lm): d for lm in seeds for n, d in py_bfs([lm]).items()
+    }
+
+
+def test_graph_loops_release_rounds_on_failure(spark):
+    """A loop that raises — here non-convergence under a too-small
+    ``max_iter`` on a 40-edge chain — must free every round it held and
+    hand nothing to release_persisted()."""
+    import pytest
+
+    from pydatalake_gen2_spark.operators.dedup import connected_components
+    from pydatalake_gen2_spark.operators.graph import (
+        bfs_distances,
+        k_core,
+        landmark_distances,
+    )
+    from pydatalake_gen2_spark.operators.util import release_persisted
+
+    def n_cached() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    release_persisted()
+    base = n_cached()
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a BIGINT, id_b BIGINT"
+    )
+    seeds = spark.createDataFrame([(0,)], "node BIGINT")
+    for run in (
+        lambda: connected_components(edges, max_iter=1),
+        lambda: k_core(edges, k=2, max_iter=1),
+        lambda: bfs_distances(edges, seeds, max_iter=2),
+        lambda: landmark_distances(edges, seeds, max_iter=2),
+    ):
+        with pytest.raises(RuntimeError):
+            run()
+        assert n_cached() == base
+    assert release_persisted() == 0
 
 
 def test_merge_upsert_null_keys_and_validation(spark):

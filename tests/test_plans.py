@@ -225,9 +225,10 @@ def test_jaccard_df_cap_has_no_window_over_tok(spark, sf_dir):
 
 
 def test_library_ops_release_cached_blocks(spark, sf_dir):
-    """ivf_topk / lsh_topk / connected_components persist intermediates;
-    after consuming + release_persisted() the cached-RDD map returns to
-    its baseline (VERDICT r2 'What's wrong' #1)."""
+    """ivf_topk / lsh_topk / connected_components / l66's BPE rounds
+    persist or checkpoint intermediates; after consuming +
+    release_persisted() the cached-RDD map returns to its baseline
+    (VERDICT r2 'What's wrong' #1)."""
     from pydatalake_gen2_spark.operators import dedup, similarity
     from pydatalake_gen2_spark.operators.util import release_persisted
 
@@ -243,6 +244,7 @@ def test_library_ops_release_cached_blocks(spark, sf_dir):
         [(1, 2), (2, 3), (10, 11)], "id_a BIGINT, id_b BIGINT"
     )
     dedup.connected_components(edges).collect()
+    load_all()["l66_bpe_train"].spark_fn(spark, sf_dir).collect()
     assert n_cached() > base  # the caches were really held...
     release_persisted()
     assert n_cached() == base  # ...and really released

@@ -287,31 +287,55 @@ def build_output(
     return headline, full
 
 
+def noop_median(spark, fn, sf_dir: str, runs: int = N_RUNS, warm: int = 1) -> float:
+    """The timing protocol: ``warm`` discarded warm-up runs of
+    ``fn(spark, sf_dir)`` into the noop sink, ``release_persisted()``, then
+    the median wall time of ``runs`` timed runs. Frames the timed runs
+    persist stay held; the caller releases them between queries.
+
+    r12 (VERDICT r11 #8): the release after the warm-up makes the first
+    timed run pay each persist's own materialization; median-of-3 still
+    records the warm figure (sidecar flag: warmup_release).
+    """
+    for _ in range(warm):
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    release_persisted()
+    times = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        times.append(time.perf_counter() - t0)
+    return statistics.median(times)
+
+
+def probe_ratio(spark, sf_dir: str, name: str = "u01_union_all") -> float:
+    """Re-probe of a pinned constant-work query (1 discarded warm
+    execution + median-of-3, matching the pin methodology), as a ratio
+    to its pin."""
+    med = noop_median(spark, load_all()[name].spark_fn, sf_dir, runs=3)
+    return round(med / PROBE_PINS[name], 2)
+
+
+def probe_pass(spark, sf_dir: str) -> tuple[dict[str, float], float]:
+    """One full start-of-run probe pass (warm-up + median-of-PROBE_RUNS
+    per pin): the per-pin seconds and their geometric-mean ratio to the
+    pins."""
+    p = {
+        name: round(noop_median(spark, load_all()[name].spark_fn, sf_dir, PROBE_RUNS), 3)
+        for name in PROBE_PINS
+    }
+    # Geometric mean of the per-probe ratios: symmetric in over/under,
+    # and one noisy probe can't dominate like an arithmetic mean would.
+    ratios = [p[n] / pin for n, pin in PROBE_PINS.items()]
+    return p, round(math.exp(sum(math.log(r) for r in ratios) / len(ratios)), 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     reg = load_all()
     names = [n for n in BENCH_QUERIES if n in reg]
     spark = get_spark("bench")
-
-    def _probe_pass() -> tuple[dict[str, float], float]:
-        """One full start-of-run probe pass (warm-up + median-of-N per pin)."""
-        p: dict[str, float] = {}
-        for name, _pin in PROBE_PINS.items():
-            fn = reg[name].spark_fn
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
-            runs = []
-            for _ in range(PROBE_RUNS):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            p[name] = round(statistics.median(runs), 3)
-        # Geometric mean of the per-probe ratios: symmetric in over/under,
-        # and one noisy probe can't dominate like an arithmetic mean would.
-        ratios = [p[n] / pin for n, pin in PROBE_PINS.items()]
-        return p, round(
-            math.exp(sum(math.log(r) for r in ratios) / len(ratios)), 3
-        )
 
     # Probe pass FIRST (fresh session, before any suite caching effects).
     # Only meaningful at sf0.1 — the pins are sf0.1 medians; at any other
@@ -321,29 +345,14 @@ def main() -> None:
     # before any timed query runs, so a transient contention spike at
     # launch cannot poison the whole suite (r11's 2.86x start).
     probe: dict[str, float] = {}
-    probe_ratio = None
+    probe_start = None
     probe_retries = 0
     if sf == "0.1":
-        probe, probe_ratio = _probe_pass()
-        while probe_ratio > PROBE_GATE and probe_retries < PROBE_MAX_RETRIES:
+        probe, probe_start = probe_pass(spark, sf_dir)
+        while probe_start > PROBE_GATE and probe_retries < PROBE_MAX_RETRIES:
             time.sleep(PROBE_RETRY_SLEEP_S)
             probe_retries += 1
-            probe, probe_ratio = _probe_pass()
-
-    def _probe_ratio(name: str) -> float:
-        """Re-probe of a pinned constant-work query (1 discarded warm
-        execution + median-of-3, matching the pin methodology)."""
-        fn = reg[name].spark_fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        return round(statistics.median(runs) / PROBE_PINS[name], 2)
-
-    def _u01_ratio() -> float:
-        return _probe_ratio("u01_union_all")
+            probe, probe_start = probe_pass(spark, sf_dir)
 
     # Reference map for the outlier re-run gate: the committed sidecar of
     # the PREVIOUS run, read before this run overwrites it. Only used when
@@ -362,14 +371,6 @@ def main() -> None:
     except Exception:
         pass
 
-    def _timed_medians(fn) -> float:
-        runs = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        return statistics.median(runs)
-
     mid_ratios: list[float] = []
     mid_ratios_s01: list[float] = []
     # Mid-run probe points only make sense for suites long enough to HAVE
@@ -384,15 +385,10 @@ def main() -> None:
     reruns: dict[str, list[float]] = {}
     for i, name in enumerate(names):
         if i in mid_points:
-            mid_ratios.append(_u01_ratio())
-            mid_ratios_s01.append(_probe_ratio("s01_parquet_scan"))
+            mid_ratios.append(probe_ratio(spark, sf_dir))
+            mid_ratios_s01.append(probe_ratio(spark, sf_dir, "s01_parquet_scan"))
         fn = reg[name].spark_fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm-up
-        # r12 (VERDICT r11 #8): drop warm-up-populated persisted blocks so
-        # the timed runs pay each persist's own materialization (run 1) —
-        # median-of-3 still records the warm figure (flag: warmup_release).
-        release_persisted()
-        med = _timed_medians(fn)
+        med = noop_median(spark, fn, sf_dir)
         # r12 outlier re-run: >RERUN_FACTOR x the committed sidecar figure
         # AND the host probe is hot RIGHT NOW -> one bounded re-run,
         # REPORT-ONLY: the first median stays the official figure and the
@@ -403,19 +399,18 @@ def main() -> None:
             and ref_map[name] > 0
             and med > RERUN_FACTOR * ref_map[name]
             and len(reruns) < RERUN_MAX
-            and _u01_ratio() >= PROBE_GATE
+            and probe_ratio(spark, sf_dir) >= PROBE_GATE
         ):
-            release_persisted()
-            med2 = _timed_medians(fn)
+            med2 = noop_median(spark, fn, sf_dir, warm=0)
             reruns[name] = [round(med, 3), round(med2, 3)]
         timings[name] = round(med, 3)
         release_persisted()  # drop operator-cached blocks between queries
     if probe:
-        mid_ratios.append(_u01_ratio())  # end-of-suite point
-        mid_ratios_s01.append(_probe_ratio("s01_parquet_scan"))
+        mid_ratios.append(probe_ratio(spark, sf_dir))  # end-of-suite point
+        mid_ratios_s01.append(probe_ratio(spark, sf_dir, "s01_parquet_scan"))
 
     headline, full = build_output(
-        timings, probe, probe_ratio, sf, mid_ratios or None,
+        timings, probe, probe_start, sf, mid_ratios or None,
         mid_ratios_s01 or None, probe_retries, reruns,
     )
     with open(sidecar, "w") as f:

@@ -32,7 +32,7 @@ from typing import Any
 
 import duckdb
 
-from pydatalake_gen2_spark.registry import REGISTRY, load_all
+from pydatalake_gen2_spark.registry import REGISTRY
 from pydatalake_gen2_spark.tables import TABLES
 
 
@@ -167,16 +167,3 @@ def run_pair(spark, con, sf_dir: str, name: str) -> dict:
         out["detail"] = f"only_spark={only_s} only_duck={only_d}"
     return out
 
-
-def run_all(spark, sf_dir: str, names: list[str] | None = None) -> list[dict]:
-    load_all()
-    con = duck_connect(sf_dir)
-    results = []
-    for name in names or sorted(REGISTRY):
-        try:
-            results.append(run_pair(spark, con, sf_dir, name))
-        except Exception as e:  # keep sweeping; report the failure
-            results.append(
-                {"name": name, "status": "ERROR", "detail": f"{type(e).__name__}: {e}"[:400]}
-            )
-    return results

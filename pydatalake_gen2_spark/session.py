@@ -25,17 +25,21 @@ import os
 from pyspark.sql import SparkSession
 
 
-def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
-    """60% of ``MemTotal`` in ``meminfo``, floored to whole GB (at least
-    ``1g``); where that file is absent, of the physical pages sysconf
-    reports."""
+def mem_total_bytes(meminfo: str = "/proc/meminfo") -> int:
+    """``MemTotal`` in ``meminfo``, in bytes; where that file is absent,
+    the physical pages sysconf reports."""
     try:
         with open(meminfo) as f:
             kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
-        total = kb * 1024
+        return kb * 1024
     except (OSError, StopIteration):
-        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{max(1, int(0.6 * total / 2**30))}g"
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """60% of ``mem_total_bytes(meminfo)``, floored to whole GB (at least
+    ``1g``)."""
+    return f"{max(1, int(0.6 * mem_total_bytes(meminfo) / 2**30))}g"
 
 
 def get_spark(

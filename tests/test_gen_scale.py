@@ -7,6 +7,7 @@ N exact copies whose pair output would explode quadratically)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -19,7 +20,8 @@ def scaled_dir(tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sfx2"))
     r = subprocess.run(
         [sys.executable, "tools/gen_scale.py", "2", out],
-        cwd="/root/repo", capture_output=True, text=True, timeout=420,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     return out

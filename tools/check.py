@@ -10,16 +10,22 @@ executing a job, so an operator that fails at analysis time (illegal
 expression, unresolved column, bad plan shape) can never ship unrun —
 the dq07 class of bug. Seconds for most of the registry; pairs that
 materialize fixtures inside their builder still pay that one-time cost.
+
+Each pair's verdict and wall time print as it lands, flushed, so long
+sweeps at sf1+ (where one heavy DuckDB oracle can grind for an hour) are
+observable and interruptible, and their partial output survives as an
+artifact (see evidence/sweep_sf1_*.log).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pydatalake_gen2_spark.harness import run_all
+from pydatalake_gen2_spark.harness import duck_connect, run_pair
 from pydatalake_gen2_spark.registry import load_all
 from pydatalake_gen2_spark.session import get_spark
 
@@ -32,7 +38,7 @@ def _selected(prefixes: list[str]) -> list[str]:
     )
 
 
-def analyze_only(sf_dir: str, prefixes: list[str]) -> int:
+def analyze_only(sf_dir: str, names: list[str]) -> int:
     """Construct + analyze every selected pair; no job execution.
 
     Also runs the round-11 dtype-class parity gate (typeaudit): Spark's
@@ -40,11 +46,9 @@ def analyze_only(sf_dir: str, prefixes: list[str]) -> int:
     both sides — so an integral-vs-decimal/float/string class drift (the
     dq08 driver-red class) can never ship unflagged.
     """
-    from pydatalake_gen2_spark.harness import duck_connect
     from pydatalake_gen2_spark.registry import REGISTRY
     from pydatalake_gen2_spark.typeaudit import audit_pair
 
-    names = _selected(prefixes)
     spark = get_spark("analyze")
     con = duck_connect(sf_dir)
     bad = 0
@@ -73,22 +77,29 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     prefixes = argv[1:]
     load_all()
-    if analyze:
-        return analyze_only(sf_dir, prefixes)
-
     names = _selected(prefixes)
+    if not names:
+        print(f"no registered pair matches {prefixes}", file=sys.stderr)
+        return 2
+    if analyze:
+        return analyze_only(sf_dir, names)
+
     spark = get_spark("check")
-    results = run_all(spark, sf_dir, names)
+    con = duck_connect(sf_dir)
     bad = 0
-    for r in results:
+    for name in names:
+        t0 = time.time()
+        try:
+            r = run_pair(spark, con, sf_dir, name)
+        except Exception as e:  # noqa: BLE001 — keep sweeping, report all
+            r = {"status": "ERROR", "detail": f"{type(e).__name__}: {e}"}
         ok = r["status"] in ("match", "rows_only")
-        if not ok:
-            bad += 1
-        line = f"{'OK ' if ok else 'FAIL'} {r['name']:38s} {r['status']}"
+        bad += 0 if ok else 1
+        line = f"{'OK ' if ok else 'FAIL'} {name:38s} {r['status']} ({time.time() - t0:.1f}s)"
         if not ok:
             line += f"\n     {r.get('detail', '')[:500]}"
-        print(line)
-    print(f"\n{len(results) - bad}/{len(results)} pass")
+        print(line, flush=True)
+    print(f"\n{len(names) - bad}/{len(names)} pass", flush=True)
     return 1 if bad else 0
 
 

@@ -9,9 +9,11 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pydatalake_gen2_spark.registry import load_all
 from pydatalake_gen2_spark.session import get_spark
@@ -146,7 +148,7 @@ def main() -> None:
         df = reg[name].spark_fn(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(mode)
         out += [f"## {name} — {why}", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOW)} plans)")
 

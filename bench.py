@@ -146,29 +146,6 @@ BENCH_QUERIES = [
 
 N_RUNS = 3
 
-# r12 (VERDICT r11 "next round" #1): contention-proofing. The r11 driver
-# bench ran at start-probe 2.86x and recorded all 15 common queries 2-10x
-# "regressed" while the same code at probe 1.24 beat the prior round — the
-# probes diagnosed the contention but nothing acted on them. Two bounded,
-# additive countermeasures:
-#   * probe-gated start: while the start-of-run probe ratio exceeds
-#     PROBE_GATE, sleep and re-probe (at most PROBE_MAX_RETRIES times);
-#     the FINAL pass is the recorded probe, computed exactly as before,
-#     and the retry count is recorded as probe.probe_retries.
-#   * bounded outlier re-run: a query reading > RERUN_FACTOR x its
-#     committed BENCH_FULL.json sidecar figure triggers an on-the-spot
-#     u01 probe; if that reads >= PROBE_GATE (host hot NOW), the query is
-#     re-run once (same warm-up-already-done median-of-N protocol). The
-#     re-run is report-only: the first median stays the recorded figure,
-#     and both readings land in the sidecar under "reruns" so a reader
-#     can judge the contention from the artifact.
-# Neither changes the timed protocol of a query measured on a quiet host.
-PROBE_GATE = 1.5
-PROBE_MAX_RETRIES = 5
-PROBE_RETRY_SLEEP_S = 20.0
-RERUN_FACTOR = 3.0
-RERUN_MAX = 10
-
 # Contention probe (r8 verdict "next round" #3): u01/s01 are constant-work,
 # plan-stable queries whose code paths have been untouched since round 1 —
 # any movement in them is HOST state, not engine state. Their round-1 pins
@@ -187,8 +164,6 @@ def build_output(
     sf: str,
     mid_ratios: list[float] | None = None,
     mid_ratios_s01: list[float] | None = None,
-    probe_retries: int = 0,
-    reruns: dict[str, list[float]] | None = None,
 ) -> tuple[dict, dict]:
     """Build the (headline, full) output pair.
 
@@ -228,9 +203,6 @@ def build_output(
             # queries ran 1.5-2x slow in isolated re-runs. The pair of
             # paths separates CPU from disk host state in the artifact.
             "s01_ratio_path": mid_ratios_s01,
-            # r12: how many times the probe-gated start re-probed before
-            # the suite began (0 = host was at <= PROBE_GATE immediately).
-            "probe_retries": probe_retries,
         }
         if probe_ratio is not None
         else None
@@ -273,10 +245,6 @@ def build_output(
     full["variance_note"] = (
         "±25% typical; heavy queries swing more under host contention"
     )
-    # r12 contention-proofing bookkeeping (sidecar only — the headline
-    # stays small): per-query [first_median, rerun_median] for every
-    # outlier re-run that fired, and the recorded methodology flags.
-    full["reruns"] = reruns or {}
     # r12 (VERDICT r11 #8): persisted/checkpointed frames are now released
     # after each query's WARM-UP run, so the first timed run pays the
     # persist materialization cost instead of inheriting the warm-up's
@@ -341,35 +309,10 @@ def main() -> None:
     # Only meaningful at sf0.1 — the pins are sf0.1 medians; at any other
     # scale the ratio would mix data size with contention and mislead, so
     # the probe is skipped entirely (no ratio is better than a wrong one).
-    # r12: probe-GATED start — a hot host gets a bounded sleep-and-retry
-    # before any timed query runs, so a transient contention spike at
-    # launch cannot poison the whole suite (r11's 2.86x start).
     probe: dict[str, float] = {}
     probe_start = None
-    probe_retries = 0
     if sf == "0.1":
         probe, probe_start = probe_pass(spark, sf_dir)
-        while probe_start > PROBE_GATE and probe_retries < PROBE_MAX_RETRIES:
-            time.sleep(PROBE_RETRY_SLEEP_S)
-            probe_retries += 1
-            probe, probe_start = probe_pass(spark, sf_dir)
-
-    # Reference map for the outlier re-run gate: the committed sidecar of
-    # the PREVIOUS run, read before this run overwrites it. Only used when
-    # it was recorded at the same scale factor.
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    ref_map: dict[str, float] = {}
-    try:
-        with open(sidecar) as f:
-            _ref = json.load(f)
-        if str(_ref.get("sf")) == str(float(sf) if sf.replace(".", "").isdigit() else sf):
-            ref_map = {
-                k: float(v) for k, v in _ref.get("queries", {}).items()
-            }
-    except Exception:
-        pass
 
     mid_ratios: list[float] = []
     mid_ratios_s01: list[float] = []
@@ -382,37 +325,20 @@ def main() -> None:
         else set()
     )
     timings: dict[str, float] = {}
-    reruns: dict[str, list[float]] = {}
     for i, name in enumerate(names):
         if i in mid_points:
             mid_ratios.append(probe_ratio(spark, sf_dir))
             mid_ratios_s01.append(probe_ratio(spark, sf_dir, "s01_parquet_scan"))
-        fn = reg[name].spark_fn
-        med = noop_median(spark, fn, sf_dir)
-        # r12 outlier re-run: >RERUN_FACTOR x the committed sidecar figure
-        # AND the host probe is hot RIGHT NOW -> one bounded re-run,
-        # REPORT-ONLY: the first median stays the official figure and the
-        # [first, rerun] pair goes to the sidecar's `reruns`.
-        if (
-            probe
-            and name in ref_map
-            and ref_map[name] > 0
-            and med > RERUN_FACTOR * ref_map[name]
-            and len(reruns) < RERUN_MAX
-            and probe_ratio(spark, sf_dir) >= PROBE_GATE
-        ):
-            med2 = noop_median(spark, fn, sf_dir, warm=0)
-            reruns[name] = [round(med, 3), round(med2, 3)]
-        timings[name] = round(med, 3)
+        timings[name] = round(noop_median(spark, reg[name].spark_fn, sf_dir), 3)
         release_persisted()  # drop operator-cached blocks between queries
     if probe:
         mid_ratios.append(probe_ratio(spark, sf_dir))  # end-of-suite point
         mid_ratios_s01.append(probe_ratio(spark, sf_dir, "s01_parquet_scan"))
 
     headline, full = build_output(
-        timings, probe, probe_start, sf, mid_ratios or None,
-        mid_ratios_s01 or None, probe_retries, reruns,
+        timings, probe, probe_start, sf, mid_ratios or None, mid_ratios_s01 or None
     )
+    sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
     with open(sidecar, "w") as f:
         json.dump(full, f, indent=1)
         f.write("\n")

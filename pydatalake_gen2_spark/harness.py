@@ -16,10 +16,9 @@ pass a value-equality compare and still fail the driver.  Two defenses:
   2126 now FAILS locally, matching the driver.
 - int-vs-float class drift (``2126 == 2126.0`` under Python hashing) is
   NOT distinguishable at value level without breaking legitimate float
-  compares; that class is closed statically by the registry-wide dtype
-  parity gate (``pydatalake_gen2_spark.typeaudit``), which binds both
-  schemas joblessly and fails integral-vs-decimal/float/string divergence
-  for every pair — including ones never executed locally.
+  compares; that class is closed statically: ``run_pair`` first runs
+  ``typeaudit.audit_pair`` (dtype-class parity plus the shape contract)
+  on the frame it built, and a pair that fails it is never collected.
 """
 
 from __future__ import annotations
@@ -34,6 +33,7 @@ import duckdb
 
 from pydatalake_gen2_spark.registry import REGISTRY
 from pydatalake_gen2_spark.tables import TABLES
+from pydatalake_gen2_spark.typeaudit import audit_pair
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -97,7 +97,7 @@ _FLOAT64_EXACT_MAX = 1 << 53  # largest contiguous exact integer in float64
 
 def _fence_float64_exact(name: str, cols: list[str], rows: list[tuple]) -> None:
     """Runtime half of the round-6 canonicalizer fence (the static half is
-    tests/test_correctness.py::test_canonicalizer_shape_contract): no
+    ``typeaudit.audit_pair``'s shape contract, run by ``run_pair``): no
     rendered INTEGRAL numeric cell may exceed 2^53 in magnitude. Past
     that, a float64-coercing hasher (pandas on either engine's result)
     can render equal values differently per engine — the round-5 driver
@@ -140,15 +140,22 @@ def run_pair(spark, con, sf_dir: str, name: str) -> dict:
 
     qp = REGISTRY[name]
     sdf = qp.spark_fn(spark, sf_dir)
+    out = {"name": name, "tier": qp.tier}
+    if qp.duck_sql is not None:
+        problems = audit_pair(con, qp.duck_sql, sdf)
+        if problems:
+            release_persisted()
+            out["status"] = "STATIC_MISMATCH"
+            out["detail"] = "; ".join(problems)
+            return out
     s_cols = [c.lower() for c in sdf.columns]
     s_rows = [tuple(r) for r in sdf.collect()]
     release_persisted()  # operator caches are consumed; drop the blocks
-    if qp.duck_sql is not None:
-        _fence_float64_exact(name, s_cols, s_rows)
-    out = {"name": name, "tier": qp.tier, "spark_rows": len(s_rows)}
+    out["spark_rows"] = len(s_rows)
     if qp.duck_sql is None:
         out["status"] = "rows_only"
         return out
+    _fence_float64_exact(name, s_cols, s_rows)
     dres = con.execute(qp.duck_sql)
     d_cols = [d[0].lower() for d in dres.description]
     d_rows = dres.fetchall()

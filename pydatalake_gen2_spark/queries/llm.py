@@ -2182,7 +2182,9 @@ def l36_minhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. md5-on-string beats murmur here because every engine renders
     identical hex — cross-engine reproducibility is itself a pipeline
     requirement (rerunning dedup on a different engine must keep the
-    same docs)."""
+    same docs).
+    Precondition: doc_id is unique and non-NULL, else array_distinct is not
+    the corpus-wide .distinct() it replaces (tests/test_correctness.py)."""
     from pydatalake_gen2_spark.operators.util import spread, track_persist
 
     # spread(): the local fixture is one parquet split, which would run
@@ -3308,7 +3310,9 @@ def l59_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     running the identical algorithm. In production the band index is
     exactly what persists between ingests (l24's argument), written
     bucketed by (band, bh) so future ingests probe it shuffle-free.
-    Output: each new doc's best corpus match at Jaccard >= tau."""
+    Output: each new doc's best corpus match at Jaccard >= tau.
+    Precondition: doc_id is unique and non-NULL, else array_distinct is not
+    the corpus-wide .distinct() it replaces (tests/test_correctness.py)."""
     from pydatalake_gen2_spark.operators.util import spread
     from pyspark.sql.window import Window
 
@@ -3454,7 +3458,9 @@ def l60_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     prevent, here measured instead of assumed away). Scale shape:
     train's distinct gram set is one partial-agg pass; the held-out gram
     stream joins it on the gram key (at extreme cardinality swap in
-    l17b's bloom prefilter); per-doc tallies are one more partial agg."""
+    l17b's bloom prefilter); per-doc tallies are one more partial agg.
+    Precondition: doc_id is unique and non-NULL, else array_distinct is not
+    the corpus-wide .distinct() it replaces (tests/test_correctness.py)."""
     from pydatalake_gen2_spark.operators.util import spread
 
     h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)

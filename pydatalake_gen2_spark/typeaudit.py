@@ -1,15 +1,15 @@
-"""Static dtype-class parity gate: Spark analyzed schema vs DuckDB bind.
+"""Static driver-safety audit of one built pair (``audit_pair``): dtype-
+class parity plus the shape contract, read without running a job.  It is
+the static half of every oracle check (``harness.run_pair`` calls it
+before collecting; the runtime half is ``harness._fence_float64_exact``).
 
-Round-10 driver finding: the dq08 oracle left a SimHash fingerprint as
-DuckDB HUGEINT (``sum(BIGINT)`` widens), so the output column reached the
-driver as DECIMAL128(38,0) while Spark emitted int64 — values
-byte-identical, rendering-hash red.  The local canonicalizer's
-Decimal→float coercion masked the class from every local gate.  This
-module closes the whole CLASS, not just dq08: for every registered
-QueryPair it compares the Spark analyzed schema (``df.schema`` — jobless)
-against DuckDB's static bind of the oracle (``con.sql(sql)`` — lazy
-relation, no execution) and fails any pair whose column TYPE CLASSES
-diverge.
+Parity compares Spark's analyzed schema (``df.schema``) against DuckDB's
+static bind of the oracle (``con.sql(sql)`` — lazy relation, no
+execution) and fails any column whose TYPE CLASSES diverge.  Round-10
+driver finding behind it: the dq08 oracle left a SimHash fingerprint as
+DuckDB HUGEINT (``sum(BIGINT)`` widens), so the column reached the driver
+as DECIMAL128(38,0) while Spark emitted int64 — values byte-identical,
+rendering-hash red.
 
 Type classes (what the driver's Arrow/string renderer distinguishes):
 
@@ -120,34 +120,109 @@ def duck_type_class(t: Any) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Pair / registry audit
+# Shape contract: wide decimal->double casts anywhere in the analyzed plan
 # ---------------------------------------------------------------------------
 
-def audit_pair(spark, con, sf_dir: str, name: str, sdf=None) -> list[str]:
-    """Return per-column class mismatches for one pair ([] = parity).
+def _walk_wide_casts(jplan) -> set:
+    """Collect (child_type, 'double') for every Cast(decimal(p>=19, s=0)
+    -> double) in an analyzed plan, recursing through plan nodes,
+    expression trees, and subquery plans via py4j."""
+    import re
 
-    Constructs the Spark DataFrame (analyzer only — no job) and binds the
-    oracle SQL as a lazy DuckDB relation (no execution).  Columns are
-    matched by lower-cased name, order-insensitive, mirroring the
-    driver's sort-columns-by-name compare.  Pass ``sdf`` when the
-    caller already built the pair's DataFrame (tools/check.py
-    --analyze) — only its schema is read, and side-effectful pairs
-    (stream drains, versioned-table writes) then construct once, not
-    twice.
+    hits = set()
+    stack = [jplan]
+    while stack:
+        node = stack.pop()
+        try:
+            ch = node.children()
+            for i in range(ch.size()):
+                stack.append(ch.apply(i))
+        except Exception:
+            pass
+        try:
+            exprs = node.expressions()
+        except Exception:
+            continue
+        estack = [exprs.apply(i) for i in range(exprs.size())]
+        while estack:
+            e = estack.pop()
+            cls = e.getClass().getSimpleName()
+            if cls == "Cast":
+                try:
+                    dt = e.dataType().simpleString()
+                    cdt = e.child().dataType().simpleString()
+                    m = re.match(r"decimal\((\d+),(\d+)\)", cdt)
+                    if dt == "double" and m and int(m.group(1)) >= 19 \
+                            and int(m.group(2)) == 0:
+                        hits.add((cdt, dt))
+                except Exception:
+                    pass
+            if "Subquery" in cls or "Exists" in cls or "ListQuery" in cls:
+                try:
+                    stack.append(e.plan())
+                except Exception:
+                    pass
+            try:
+                ech = e.children()
+                for i in range(ech.size()):
+                    estack.append(ech.apply(i))
+            except Exception:
+                pass
+    return hits
+
+
+# ---------------------------------------------------------------------------
+# The per-pair static audit
+# ---------------------------------------------------------------------------
+
+def audit_pair(con, duck_sql: str, sdf) -> list[str]:
+    """Problems of one built pair under the static audit ([] = safe).
+
+    Reads only ``sdf``'s analyzed schema and plan and DuckDB's lazy bind
+    of ``duck_sql``. Parity matches columns by lower-cased name, order-
+    insensitive, mirroring the driver's sort-columns-by-name compare.
+
+    Shape contract (the driver's external canonicalizer):
+
+    (1) No complex-typed output columns: the external canonicalizer
+        pandas-sorts and hashes result cells, and dies on list/dict
+        cells (round-1 VERDICT: f30/f31/f32 TypeError unhashable list).
+        Arrays are rendered via array_join/array_to_string in the pair.
+
+    (2) No wide integer-decimal OUTPUT columns (DecimalType precision >
+        15, scale 0): their values can pass 2^53, where a float64-
+        coercing hasher renders Spark's Decimal and DuckDB's int128
+        differently even when the values are EQUAL — the round-5 driver
+        red row (g51's DECIMAL(38,0) cents^2 sums, ~2^61). Render such
+        values as STRING, or keep them < 2^53 via sqlexact.idiv.
+
+    (3) No Cast(decimal(p>=19, s=0) -> double) ANYWHERE in the analyzed
+        plan: width >= 19 is DuckDB's int128 storage, whose cast to
+        double is NOT correctly rounded (1-ulp drift, observed live on
+        g39's 70-bit moments) — a shared-text cast can therefore differ
+        per engine even on equal inputs, and a terminal ROUND(6) only
+        shrinks the window where the ulp flips a rounding boundary.
+        Use sqlexact.dec2dbl (deterministic hi/lo int64 split) or exact
+        integer division instead. Width <= 18 scale-0 casts are int64-
+        backed in both engines (correctly rounded — deterministic), and
+        scaled money casts (e.g. DECIMAL(28,4) revenue) keep their
+        unscaled payloads < 2^53 at test scale; both stay allowed.
     """
-    from pydatalake_gen2_spark.registry import REGISTRY
-
-    qp = REGISTRY[name]
-    if qp.duck_sql is None:
-        return []
-    if sdf is None:
-        sdf = qp.spark_fn(spark, sf_dir)
-    s_types = {f.name.lower(): spark_type_class(f.dataType) for f in sdf.schema.fields}
-    rel = con.sql(qp.duck_sql)
+    problems = []
+    s_types = {}
+    for f in sdf.schema.fields:
+        dt = f.dataType
+        s_types[f.name.lower()] = spark_type_class(dt)
+        if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+            problems.append(f"{f.name}: complex output {dt.simpleString()}")
+        if isinstance(dt, T.DecimalType) and dt.precision > 15 and dt.scale == 0:
+            problems.append(f"{f.name}: wide integer-decimal output {dt.simpleString()}")
+    for cdt, dt in sorted(_walk_wide_casts(sdf._jdf.queryExecution().analyzed())):
+        problems.append(f"plan: wide-decimal cast {cdt} -> {dt}")
+    rel = con.sql(duck_sql)
     d_types = {
         c.lower(): duck_type_class(t) for c, t in zip(rel.columns, rel.types)
     }
-    problems = []
     for col in sorted(set(s_types) | set(d_types)):
         sc, dc = s_types.get(col), d_types.get(col)
         if sc is None or dc is None:
@@ -156,22 +231,3 @@ def audit_pair(spark, con, sf_dir: str, name: str, sdf=None) -> list[str]:
         elif sc != dc:
             problems.append(f"{col}: spark={sc} duck={dc}")
     return problems
-
-
-def audit_all(spark, sf_dir: str, names: list[str] | None = None) -> dict[str, list[str]]:
-    """Audit every (or the selected) registered pair; returns {name: problems}
-    for pairs with at least one mismatch or an audit-time error."""
-    from pydatalake_gen2_spark.harness import duck_connect
-    from pydatalake_gen2_spark.registry import REGISTRY, load_all
-
-    load_all()
-    con = duck_connect(sf_dir)
-    out: dict[str, list[str]] = {}
-    for name in names or sorted(REGISTRY):
-        try:
-            problems = audit_pair(spark, con, sf_dir, name)
-        except Exception as e:  # noqa: BLE001 — surface every failure class
-            problems = [f"AUDIT_ERROR {type(e).__name__}: {str(e)[:300]}"]
-        if problems:
-            out[name] = problems
-    return out

@@ -43,8 +43,9 @@ def test_headline_line_parses_and_fits_tail_window():
     assert set(parsed["queries"]) == set(BASELINE15)
     assert parsed["n_queries_total"] == len(timings)
     assert len(line) < 1500, f"headline line {len(line)} chars breaches tail budget"
-    # The sidecar dict carries the complete map.
+    # The sidecar dict carries the complete map and the methodology flag.
     assert set(full["queries"]) == set(timings)
+    assert full["warmup_release"] is True
 
 
 def test_headline_line_without_probe_still_fits():
@@ -83,23 +84,3 @@ def test_headline_with_probe_path_still_fits():
     assert full["probe"]["u01_ratio_path"] == [1.23, 4.56, 2.34]
     assert parsed["probe"]["s01_ratio_path"] == [1.11, 2.22, 3.33]
     assert full["probe"]["s01_ratio_path"] == [1.11, 2.22, 3.33]
-
-
-def test_headline_with_retry_and_rerun_fields_still_fits():
-    # r12 contention-proofing: probe_retries rides in the headline probe
-    # object; the per-query rerun pairs live in the SIDECAR only (the
-    # headline budget stays untouched no matter how many reruns fired).
-    timings, probe, probe_ratio = _fake_inputs(100)
-    reruns = {f"q{i:03d}_some_operator_name": [99.999, 1.234] for i in range(10)}
-    headline, full = build_output(
-        timings, probe, probe_ratio, "0.1",
-        [1.23, 4.56, 2.34], [1.11, 2.22, 3.33],
-        probe_retries=5, reruns=reruns,
-    )
-    line = json.dumps(headline)
-    assert len(line) < 1500, f"headline line {len(line)} chars breaches tail budget"
-    parsed = json.loads(line)
-    assert parsed["probe"]["probe_retries"] == 5
-    assert "reruns" not in parsed
-    assert full["reruns"] == reruns
-    assert full["warmup_release"] is True

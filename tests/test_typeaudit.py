@@ -1,10 +1,12 @@
-"""Round-11 gate-parity tests: the dtype-class audit and the Decimal-strict
-canonicalizer — the two defenses against the dq08 class (driver-red on a
-rendering-type drift that every round-1..10 local gate passed).
+"""Gate-parity tests: the static audit (dtype-class parity and the shape
+contract) and the Decimal-strict canonicalizer — the defenses against the
+dq08 class (driver-red on a rendering-type drift that every round-1..10
+local gate passed) and the canonicalizer shape failures.
 """
 
 from __future__ import annotations
 
+import uuid
 from decimal import Decimal
 
 import pytest
@@ -85,59 +87,77 @@ def test_duck_type_classes(duck):
 
 
 # ---------------------------------------------------------------------------
-# The planted-HUGEINT regression: an oracle that leaves sum(BIGINT) uncast
-# must be REJECTED by the static gate even though values are identical.
+# Planted pairs: one per audit clause. Each must be REJECTED by the static
+# audit, and run_pair must return STATIC_MISMATCH without running it.
 # ---------------------------------------------------------------------------
 
-def test_planted_hugeint_oracle_rejected(spark, duck, sf_dir):
+_PLANTED = {
+    # sum(BIGINT) in DuckDB widens to HUGEINT — the exact dq08 drift.
+    "hugeint_sum": (
+        "SELECT sum(r_regionkey) AS val FROM region",
+        "SELECT sum(r_regionkey) AS val FROM region",
+        "val: spark=int duck=decimal(s=0)",
+    ),
+    "array_output": (
+        "SELECT array(1, 2) AS arr",
+        "SELECT [1, 2] AS arr",
+        "arr: complex output array<int>",
+    ),
+    "wide_decimal_output": (
+        "SELECT CAST(r_regionkey AS DECIMAL(38,0)) AS v FROM region",
+        "SELECT CAST(r_regionkey AS DECIMAL(38,0)) AS v FROM region",
+        "v: wide integer-decimal output decimal(38,0)",
+    ),
+    "wide_decimal_cast": (
+        "SELECT CAST(CAST(r_regionkey AS DECIMAL(20,0)) AS DOUBLE) AS x FROM region",
+        "SELECT CAST(CAST(r_regionkey AS DECIMAL(20,0)) AS DOUBLE) AS x FROM region",
+        "plan: wide-decimal cast decimal(20,0) -> double",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PLANTED))
+def test_planted_pair_rejected(spark, duck, sf_dir, case):
     from pydatalake_gen2_spark import registry as reg
+    from pydatalake_gen2_spark.harness import run_pair
     from pydatalake_gen2_spark.registry import QueryPair
 
-    name = "zz_test_planted_hugeint"
+    spark_sql, duck_sql, problem = _PLANTED[case]
+    sc = spark.sparkContext
+    group = f"test-planted-{uuid.uuid4().hex}"
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    built = []
 
     def spark_fn(s, d):
         reg.ensure_views(s, d)
-        return s.sql("SELECT sum(r_regionkey) AS val FROM region")
+        df = s.sql(spark_sql)
+        built.append(jobs())
+        return df
 
-    # sum(BIGINT) in DuckDB widens to HUGEINT — the exact dq08 drift.
-    qp = QueryPair(name, spark_fn, "SELECT sum(r_regionkey) AS val FROM region")
-    reg.REGISTRY[name] = qp
+    assert audit_pair(duck, duck_sql, spark_fn(spark, sf_dir)) == [problem]
+    name = f"zz_test_planted_{case}"
+    reg.REGISTRY[name] = QueryPair(name, spark_fn, duck_sql)
+    sc.setJobGroup(group, "planted pair")
     try:
-        problems = audit_pair(spark, duck, sf_dir, name)
-        assert problems == ["val: spark=int duck=decimal(s=0)"]
+        res = run_pair(spark, duck, sf_dir, name)
+        after = jobs()
     finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
         del reg.REGISTRY[name]
+    assert res["status"] == "STATIC_MISMATCH", res
+    assert res["detail"] == problem
+    assert after == built[-1], "run_pair started a job after construction"
 
 
 def test_cast_hugeint_oracle_accepted(spark, duck, sf_dir):
     from pydatalake_gen2_spark import registry as reg
-    from pydatalake_gen2_spark.registry import QueryPair
 
-    name = "zz_test_cast_hugeint"
-
-    def spark_fn(s, d):
-        reg.ensure_views(s, d)
-        return s.sql("SELECT sum(r_regionkey) AS val FROM region")
-
-    qp = QueryPair(
-        name, spark_fn,
-        "SELECT CAST(sum(r_regionkey) AS BIGINT) AS val FROM region",
-    )
-    reg.REGISTRY[name] = qp
-    try:
-        assert audit_pair(spark, duck, sf_dir, name) == []
-    finally:
-        del reg.REGISTRY[name]
-
-
-# ---------------------------------------------------------------------------
-# The registry-wide gate: every H pair binds with class parity.  (Full-run
-# twin of tools/check.py --analyze; marked slow-ish but still minutes.)
-# ---------------------------------------------------------------------------
-
-@pytest.mark.slow
-def test_registry_dtype_parity(spark, sf_dir):
-    from pydatalake_gen2_spark.typeaudit import audit_all
-
-    bad = audit_all(spark, sf_dir)
-    assert bad == {}, f"dtype-class drift in {len(bad)} pairs: {bad}"
+    reg.ensure_views(spark, sf_dir)
+    sdf = spark.sql("SELECT sum(r_regionkey) AS val FROM region")
+    duck_sql = "SELECT CAST(sum(r_regionkey) AS BIGINT) AS val FROM region"
+    assert audit_pair(duck, duck_sql, sdf) == []

@@ -8,8 +8,9 @@ Usage:
 DataFrame and forces Spark's analyzer over it (``df.schema``) without
 executing a job, so an operator that fails at analysis time (illegal
 expression, unresolved column, bad plan shape) can never ship unrun —
-the dq07 class of bug. Seconds for most of the registry; pairs that
-materialize fixtures inside their builder still pay that one-time cost.
+the dq07 class of bug — then applies the sweep's static audit. Seconds
+for most of the registry; pairs that materialize fixtures inside their
+builder still pay that one-time cost.
 
 Each pair's verdict and wall time print as it lands, flushed, so long
 sweeps at sf1+ (where one heavy DuckDB oracle can grind for an hour) are
@@ -41,10 +42,9 @@ def _selected(prefixes: list[str]) -> list[str]:
 def analyze_only(sf_dir: str, names: list[str]) -> int:
     """Construct + analyze every selected pair; no job execution.
 
-    Also runs the round-11 dtype-class parity gate (typeaudit): Spark's
-    analyzed schema vs DuckDB's static bind of the oracle — jobless on
-    both sides — so an integral-vs-decimal/float/string class drift (the
-    dq08 driver-red class) can never ship unflagged.
+    Each pair with an oracle then gets ``run_pair``'s static audit,
+    ``typeaudit.audit_pair`` (dtype-class parity and the shape contract),
+    jobless on both sides.
     """
     from pydatalake_gen2_spark.registry import REGISTRY
     from pydatalake_gen2_spark.typeaudit import audit_pair
@@ -58,14 +58,15 @@ def analyze_only(sf_dir: str, names: list[str]) -> int:
         try:
             df = pair.spark_fn(spark, sf_dir)
             _ = df.schema  # forces full analysis; never runs a job
-            problems = audit_pair(spark, con, sf_dir, name, sdf=df)
-            if problems:
-                bad += 1
-                print(f"FAIL {name:38s} TYPE_MISMATCH: {problems}")
+            if pair.duck_sql is not None:
+                problems = audit_pair(con, pair.duck_sql, df)
+                if problems:
+                    bad += 1
+                    print(f"FAIL {name:38s} STATIC_MISMATCH: {problems}")
         except Exception as e:  # noqa: BLE001 — report every failure class
             bad += 1
             print(f"FAIL {name:38s} {type(e).__name__}: {str(e)[:300]}")
-    print(f"\nanalyze+types: {len(names) - bad}/{len(names)} pass "
+    print(f"\nanalyze+types+shape: {len(names) - bad}/{len(names)} pass "
           f"({time.time() - t0:.1f}s)")
     return 1 if bad else 0
 

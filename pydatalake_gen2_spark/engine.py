@@ -161,7 +161,9 @@ class Engine:
 
     def global_row_ids(self, df, order_cols, **kw) -> DataFrame:
         """Distributed zipWithIndex — ROW_NUMBER ids without a global sort
-        (operators/rowid.py; caller releases the tracked persist)."""
+        (operators/rowid.py). The ranked intermediate is held by
+        ``operators.util.HELD``: call ``release_persisted()`` after
+        consuming the result."""
         from pydatalake_gen2_spark.operators.rowid import global_row_ids
 
         return global_row_ids(df, order_cols, **kw)

@@ -139,18 +139,22 @@ def run_pair(spark, con, sf_dir: str, name: str) -> dict:
     from pydatalake_gen2_spark.operators.util import release_persisted
 
     qp = REGISTRY[name]
-    sdf = qp.spark_fn(spark, sf_dir)
     out = {"name": name, "tier": qp.tier}
-    if qp.duck_sql is not None:
-        problems = audit_pair(con, qp.duck_sql, sdf)
-        if problems:
-            release_persisted()
-            out["status"] = "STATIC_MISMATCH"
-            out["detail"] = "; ".join(problems)
-            return out
-    s_cols = [c.lower() for c in sdf.columns]
-    s_rows = [tuple(r) for r in sdf.collect()]
-    release_persisted()  # operator caches are consumed; drop the blocks
+    # The finally frees what the pair's operators hold, whether the build,
+    # the audit or the collect raised or not: a sweep that catches the
+    # error must not run the next pair beside those blocks.
+    try:
+        sdf = qp.spark_fn(spark, sf_dir)
+        if qp.duck_sql is not None:
+            problems = audit_pair(con, qp.duck_sql, sdf)
+            if problems:
+                out["status"] = "STATIC_MISMATCH"
+                out["detail"] = "; ".join(problems)
+                return out
+        s_cols = [c.lower() for c in sdf.columns]
+        s_rows = [tuple(r) for r in sdf.collect()]
+    finally:
+        release_persisted()
     out["spark_rows"] = len(s_rows)
     if qp.duck_sql is None:
         out["status"] = "rows_only"

@@ -319,7 +319,7 @@ def simhash_neardup_pairs(
         raise ValueError(f"radius r={r} must satisfy 0 <= r <= bits-1 ({bits - 1})")
     if exact_recall:
         band_max_df = None
-    from pydatalake_gen2_spark.operators.util import track_persist
+    from pydatalake_gen2_spark.operators.util import HELD
 
     # Internally-computed fingerprints are persisted: the banded index
     # self-joins, and the fp subtree (tokenize + explode + 48 signed
@@ -327,11 +327,12 @@ def simhash_neardup_pairs(
     # sides (verified in the static plan: 4 scans, 0 ReusedExchange) —
     # without the persist the whole fingerprint pipeline runs twice.
     # Caller-supplied fingerprints are left alone (callers own their
-    # caching); release via util.release_persisted() as usual.
+    # caching); ours are held by the session owner and freed by
+    # util.release_persisted() after the caller consumes the result.
     fp = (
         fingerprints
         if fingerprints is not None
-        else track_persist(simhash(df, bits, text_col, id_col))
+        else HELD.persist(simhash(df, bits, text_col, id_col))
     ).select(F.col(id_col).alias("id"), F.col("simhash"))
     n_bands = r + 1
     _band_val, band_structs = _band_split(bits, r)
@@ -459,28 +460,29 @@ def connected_components(
     per round where there used to be two (eager materialization + a
     separate join-based changed probe re-scanning both cached rounds).
 
-    Each round's state is materialized with a PLAN-TRUNCATING
-    localCheckpoint (util.checkpoint_truncate), not a plain persist:
-    the round recurrence references the previous frame 4x, so without
-    truncation the analyzed logical plan grows 4^k and the DRIVER OOMs
-    on long chains even though the data is tiny. A util.RoundState block
-    owns the rounds: a superseded round's blocks are freed immediately, a
-    failed job or non-convergence frees every held round, and the final
-    checkpointed state passes to the caller, who releases it with
-    util.release_persisted() AFTER fully consuming (a truncated frame
-    does not recompute).
+    Each round's state is materialized with a PLAN-TRUNCATING local
+    checkpoint (``util.Held.checkpoint``), not a plain persist: the round
+    recurrence references the previous frame 4x, so without truncation
+    the analyzed logical plan grows 4^k and the DRIVER OOMs on long
+    chains even though the data is tiny. A ``util.Held`` scope owns the
+    rounds: a superseded round's blocks are freed immediately, the
+    persisted edge list is freed when the loop ends (it recomputes from
+    lineage), a failed job or non-convergence frees every held round, and
+    the final checkpoint passes to the session owner, which
+    util.release_persisted() frees AFTER the caller fully consumes the
+    result (a checkpoint does not recompute).
 
     Output: (id BIGINT, component BIGINT).
     """
-    from pydatalake_gen2_spark.operators.util import RoundState, undirected
+    from pydatalake_gen2_spark.operators.util import Held, undirected
 
-    with RoundState() as rs:
+    with Held() as held:
         # Undirected closure of the edge list + self-loops via init labels.
         # sym feeds every round's neighbor join — persist once (static
         # plan, safe to recompute, so plain persist is right here).
-        sym = rs.persist(undirected(edges, src_col, dst_col))
+        sym = held.persist(undirected(edges, src_col, dst_col))
         nodes = sym.select(F.col("s").alias("id")).distinct()
-        labels = rs.checkpoint(nodes.withColumn("lbl", F.col("id")))
+        labels = held.checkpoint(nodes.withColumn("lbl", F.col("id")))
         for _ in range(max_iter):
             cur = labels.select("id", "lbl")
             # neighbor labels: for each edge (s,d), s can adopt d's label.
@@ -509,7 +511,7 @@ def connected_components(
                     F.lit(None).cast("bigint").alias("old"),
                 )
             )
-            new_labels = rs.checkpoint(
+            new_labels = held.checkpoint(
                 cur.withColumn("old", F.col("lbl"))
                 .unionByName(nbr)
                 .unionByName(hop)
@@ -519,9 +521,9 @@ def connected_components(
             )
             # ONE job: the full (not limit-1) count materializes every
             # partition of the lazy checkpoint AND yields the convergence
-            # certificate (see checkpoint_truncate note).
+            # certificate (see the Held.checkpoint note).
             changed = new_labels.filter(F.col("lbl") != F.col("old")).count()
-            rs.drop(labels)  # superseded round: free blocks now
+            held.drop(labels)  # superseded round: free blocks now
             labels = new_labels
             if changed == 0:
                 break
@@ -872,7 +874,7 @@ def semdedup_exact(
     contraction is unchanged in spirit; only the arithmetic substrate
     moved from float32-ish gemm to exact int64.
 
-    The per-cell output is persisted (tracked for ``release_persisted``):
+    The per-cell output is persisted (held by ``util.HELD``):
     a caller's global ``orderBy`` range-partitions it, and Spark's
     boundary-sampling job would otherwise run the whole groupBy(cid)
     Python stage a second time. Measured on l31 at sf0.1 (2,000 rows):
@@ -885,10 +887,10 @@ def semdedup_exact(
     )
 
     from pydatalake_gen2_spark.operators import kmeans
-    from pydatalake_gen2_spark.operators.util import track_persist
+    from pydatalake_gen2_spark.operators.util import HELD
 
     # quantized points feed every Lloyd round AND the final contraction
-    pts = track_persist(kmeans.quantize(corpus, id_col, vec_col))
+    pts = HELD.persist(kmeans.quantize(corpus, id_col, vec_col))
     cents, assigned = kmeans.lloyd(pts, k=n_cells, iters=iters, dim=dim)
     c_arr = np.asarray(cents, dtype=np.int64)  # (k, dim)
 
@@ -947,6 +949,6 @@ def semdedup_exact(
             "keep": keep,
         })
 
-    return track_persist(
+    return HELD.persist(
         assigned.groupBy("cid").applyInPandas(dedup_cell, out_type)
     )

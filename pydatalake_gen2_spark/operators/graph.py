@@ -4,11 +4,13 @@ Engine parity note: the reference (client.py) has no graph surface; these
 extend the declared engine layer the same way the L* pipeline ops do
 (SURVEY.md 2B.14+). All loops follow the plan-truncating checkpoint
 discipline established by operators/dedup.connected_components, and all
-hold their state through one util.RoundState block: each round
+hold their state through one ``util.Held`` scope: each round
 materializes through ``checkpoint`` so the analyzed plan stays
-constant-size, a superseded round is ``drop``ped at once, a failed job or
-non-convergence frees every held round, and on success the final state's
-lifecycle belongs to the caller via util.release_persisted().
+constant-size, a superseded round is ``drop``ped at once, the persisted
+edge list is freed when the loop ends, a failed job or non-convergence
+frees every held round, and on success the rounds the result reads pass
+to the session owner, freed by ``util.release_persisted()`` after the
+caller consumes the result.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pydatalake_gen2_spark.operators.util import RoundState, undirected
+from pydatalake_gen2_spark.operators.util import Held, undirected
 
 
 def k_core(
@@ -44,10 +46,10 @@ def k_core(
     (see module docstring). Output: (node BIGINT, core_degree BIGINT) —
     every node in the k-core with its within-core degree.
     """
-    with RoundState() as rs:
+    with Held() as held:
         # lazy checkpoint + full count: one job per round materializes the
         # round and yields its edge count (the fixpoint certificate)
-        alive = rs.checkpoint(undirected(edges, src_col, dst_col), eager=False)
+        alive = held.checkpoint(undirected(edges, src_col, dst_col), eager=False)
         prev = alive.count()
         for _ in range(max_iter):
             keep = (
@@ -56,7 +58,7 @@ def k_core(
                 .filter(F.col("deg") >= k)
                 .select(F.col("s").alias("n"))
             )
-            new_alive = rs.checkpoint(
+            new_alive = held.checkpoint(
                 alive.join(keep, alive.s == keep.n, "left_semi").join(
                     keep.withColumnRenamed("n", "m"),
                     F.col("d") == F.col("m"),
@@ -65,7 +67,7 @@ def k_core(
                 eager=False,
             )
             cur = new_alive.count()
-            rs.drop(alive)
+            held.drop(alive)
             alive = new_alive
             if cur == prev:
                 break
@@ -133,12 +135,12 @@ def label_propagation(
 
     Output: (node BIGINT, label BIGINT) — label = community id.
     """
-    with RoundState() as rs:
+    with Held() as held:
         # persist (not checkpoint): a static recomputable plan — executor
         # loss mid-loop recomputes it instead of failing the job (same
         # choice as the BFS loop's edge list)
-        und = rs.persist(undirected(edges, src_col, dst_col))
-        labels = rs.checkpoint(
+        und = held.persist(undirected(edges, src_col, dst_col))
+        labels = held.checkpoint(
             und.select(F.col("s").alias("node")).distinct()
             .select("node", F.col("node").alias("label"))
         )
@@ -150,12 +152,12 @@ def label_propagation(
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
             # argmax by (cnt DESC, label ASC): min of (-cnt, label) struct
-            new_labels = rs.checkpoint(
+            new_labels = held.checkpoint(
                 votes.groupBy("n")
                 .agg(F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("label"))).alias("m"))
                 .select(F.col("n").alias("node"), F.col("m.label").alias("label"))
             )
-            rs.drop(labels)
+            held.drop(labels)
             labels = new_labels
     return labels
 
@@ -212,12 +214,12 @@ def _frontier_bfs(
     """The level-by-level BFS behind bfs_distances (``keys=["node"]``)
     and landmark_distances (``keys=["node", "lm"]``, each seed its own
     wave). Output: (*keys, dist BIGINT)."""
-    with RoundState() as rs:
-        sym = rs.persist(undirected(edges, src_col, dst_col))
+    with Held() as held:
+        sym = held.persist(undirected(edges, src_col, dst_col))
         seed = seeds.select(F.col(seed_col).cast("bigint").alias("node")).distinct()
         # levels[r] = keys first reached at depth r
         levels = [
-            rs.checkpoint(
+            held.checkpoint(
                 seed.select(*(F.col("node").alias(k) for k in keys), F.lit(0).alias("dist"))
             )
         ]
@@ -235,14 +237,14 @@ def _frontier_bfs(
             seen = levels[-1].select(*keys)
             if len(levels) >= 2:
                 seen = seen.union(levels[-2].select(*keys))
-            new_level = rs.checkpoint(
+            new_level = held.checkpoint(
                 relax.dropDuplicates(keys).join(seen, on=keys, how="left_anti"),
                 eager=False,
             )
             # ONE job: materializes every partition of the lazy checkpoint
             # AND yields the empty-frontier certificate.
             if new_level.count() == 0:
-                rs.drop(new_level)
+                held.drop(new_level)
                 break
             levels.append(new_level)
         else:

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pydatalake_gen2_spark.operators.util import track_persist
+from pydatalake_gen2_spark.operators.util import HELD
 
 
 def global_row_ids(
@@ -53,8 +53,9 @@ def global_row_ids(
     ``order_cols`` must be a unique (total-order) key set; ties would make
     the assignment of equal rows to ranks arbitrary, exactly as with
     ROW_NUMBER. The ranked intermediate is persisted so the offset pass and
-    the output pass see the same sampled range boundaries — call
-    ``operators.util.release_persisted()`` after consuming the result.
+    the output pass see the same sampled range boundaries; the session
+    owner ``util.HELD`` holds it, so call ``util.release_persisted()``
+    after consuming the result.
 
     ``df`` must also be DETERMINISTIC under recompute (a re-evaluated
     lineage yields the same rows): the two passes share the persisted frame,
@@ -62,7 +63,8 @@ def global_row_ids(
     from lineage, and a nondeterministic upstream (unseeded sample, shuffled
     input without a stable order) could then disagree with the collected
     offsets — duplicate or missing ids. Feed nondeterministic inputs through
-    ``df.localCheckpoint()`` first to sever the lineage.
+    a local checkpoint (``df.localCheckpoint()``, or ``util.HELD.checkpoint``
+    to have it freed with the rest) first to sever the lineage.
     """
     cols = list(order_cols)
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
@@ -87,7 +89,7 @@ def global_row_ids(
             seen += len(pdf)
             yield pdf
 
-    ranked = track_persist(ranged.mapInPandas(assign_local_ranks, out_schema))
+    ranked = HELD.persist(ranged.mapInPandas(assign_local_ranks, out_schema))
 
     # One row per partition — driver-side size is O(num_partitions).
     counts = ranked.groupBy("_pid").count().collect()

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pydatalake_gen2_spark.operators.util import spread, track_broadcast, track_persist
+from pydatalake_gen2_spark.operators.util import HELD, spread
 from pydatalake_gen2_spark.operators.vectors import as_double, cosine, dot, l2_norm
 
 
@@ -403,10 +403,10 @@ def ivf_topk(
     # broadcasts the tiny inverted file — without the spread the whole
     # candidate-scoring stage would run in a single task.
     two = spread(corpus.select(F.col(id_col), as_double(vec_col).alias("_v")))
-    # track_persist: cached so the assignment gemm runs once for the
-    # inverted file AND the probe side; caller releases via
-    # util.release_persisted() after consuming (see util.py contract).
-    base = track_persist(
+    # Persisted so the assignment gemm runs once for the inverted file AND
+    # the probe side; the session owner holds it until the caller consumes
+    # the result and calls util.release_persisted() (see util.Held).
+    base = HELD.persist(
         two.withColumn("_a", assign("_v")).withColumn("_n", l2_norm(F.col("_v")))
     )
     inv = base.select(id_col, "_v", "_n", F.col("_a.cell").alias("cell"))
@@ -454,9 +454,9 @@ def lsh_topk(
     never a cross product. Recall grows with n_tables (OR-amplification);
     precision is exact because survivors are re-scored."""
     corpus = spread(corpus)  # hyperplane projections are per-row heavy
-    # track_persist: bucket projections feed both join sides; caller
-    # releases via util.release_persisted() (see util.py contract).
-    bucketed = track_persist(lsh_bucket(corpus, n_planes, n_tables, seed, vec_col))
+    # Persisted: bucket projections feed both join sides; the session
+    # owner holds it until util.release_persisted() (see util.Held).
+    bucketed = HELD.persist(lsh_bucket(corpus, n_planes, n_tables, seed, vec_col))
     # Candidate generation moves ONLY (id, bucket) pairs through the
     # equi-join and the dedup — the 512-byte vectors never ride the
     # candidate shuffle (at n_tables=8 a pair can surface 8x; deduping
@@ -516,11 +516,12 @@ def lsh_topk(
             .to_numpy(zero_copy_only=False).reshape(len(ids_np), dim)
         )
         order = np.argsort(ids_np, kind="stable")
-        # Tracked: release_persisted() destroys it, so consume the result
-        # before releasing (util.py contract).
-        bc = track_broadcast(corpus.sparkSession.sparkContext.broadcast(
-            (ids_np[order], mat[order])
-        ))
+        # Held by the session owner: release_persisted() destroys it, and
+        # a destroyed broadcast does not recompute, so consume the result
+        # before releasing (see util.Held).
+        bc = HELD.broadcast(
+            corpus.sparkSession.sparkContext, (ids_np[order], mat[order])
+        )
         scored = pairs.mapInArrow(
             _pair_cos_lookup_arrow(bc, dim=dim, id_col=id_col, local_k=k),
             schema=f"query_id BIGINT, {id_col} BIGINT, cos DOUBLE",

@@ -2,160 +2,141 @@
 
 from __future__ import annotations
 
-from pyspark import Broadcast
+from operator import methodcaller
+
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Frames held past the operator call that made them: persisted
-# intermediates (ivf_topk / lsh_topk) and the final checkpointed state of
-# the iterative loops, which ``RoundState`` hands over on normal exit.
-# Callers own the lifecycle: consume the result, then call
-# ``release_persisted()``. bench.py and the test harness do this between
-# queries; a long-lived session that skips it holds evictable
-# MEMORY_AND_DISK blocks, not a hard leak. A persisted frame recomputes
-# from lineage after release; a checkpointed one does not (see
-# ``checkpoint_truncate``).
-_TRACKED: list[DataFrame] = []
-# Broadcasts created by library operators (lsh_topk's small-path matrix).
-# Unlike a persisted frame, a destroyed broadcast CANNOT be recomputed: a
-# returned DataFrame whose plan reads it fails if executed again after
-# ``release_persisted()`` — the same consume-then-release contract as
-# ``checkpoint_truncate``.
-_BROADCASTS: list[Broadcast] = []
+
+def _unpersist_checkpoint(df: DataFrame) -> None:
+    # ``DataFrame.unpersist`` is a no-op for a local checkpoint (its RDD is
+    # not in the CacheManager) and the ContextCleaner frees it only at some
+    # later GC, so unpersist the ``LogicalRDD``'s backing RDD directly: a
+    # JVM field read to free blocks, NOT a DataFrame->RDD conversion
+    # (nothing is recomputed or re-planned), hence exempt from the
+    # test_no_rdd_conversion_in_source gate.
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)  # jvm-rdd-release
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-materialized frame for ``release_persisted()``."""
-    _TRACKED.append(df)
-    return df
-
-
-def track_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` and register it for ``release_persisted()``."""
-    df.persist()
-    _TRACKED.append(df)
-    return df
-
-
-def track_broadcast(bc: Broadcast) -> Broadcast:
-    """Register a broadcast for ``destroy()`` in ``release_persisted()``."""
-    _BROADCASTS.append(bc)
-    return bc
-
-
-def checkpoint_truncate(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and TRUNCATE its logical plan (localCheckpoint).
-
-    Iterative algorithms (connected components' pointer doubling) reference
-    the previous round's frame several times per round; ``persist()`` caches
-    the *data* but the analyzed logical plan still grows multiplicatively
-    (~4x/round here), and analyzing a 4^k-leaf tree OOMs the driver long
-    before the data does. ``localCheckpoint(eager=True)`` cuts the plan to a
-    flat ``LogicalRDD`` so every round starts from a constant-size plan —
-    the same reason GraphFrames/GraphX checkpoint each superstep. The blocks
-    are executor-local (an executor loss mid-loop fails the job and the
-    caller reruns; a production session that needs fault tolerance sets
-    ``sparkContext.setCheckpointDir`` and swaps in ``.checkpoint()``).
-
-    NOTE: unlike plain persist, a truncated frame CANNOT be recomputed
-    after its blocks are released — release only after fully consuming.
-
-    ``eager=False`` defers materialization to the caller's NEXT action —
-    used by the iterative loops to fuse the round's convergence count
-    into the materialization job (one driver job per round instead of
-    two — guide §7 driver overhead). The caller MUST then run an action
-    that computes EVERY partition (a full count/aggregate, never
-    limit(1)) before releasing the frame it was derived from: a
-    partially-materialized lazy checkpoint recomputes missing partitions
-    from lineage, and the parent's blocks must still exist for that.
-    """
-    return df.localCheckpoint(eager=eager)
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks behind a ``checkpoint_truncate`` frame immediately.
-
-    ``DataFrame.unpersist`` is a no-op for localCheckpointed frames (their
-    RDD is not in the CacheManager), and waiting for the ContextCleaner
-    makes block release nondeterministic — so reach through to the
-    ``LogicalRDD``'s underlying RDD and unpersist it directly.
-    """
+def _free(items: list, free) -> None:
+    """Free and forget every item. Only a stopped SparkContext excuses a
+    failed free (its blocks went with it); any other failure raises, so a
+    leak surfaces instead of passing silently."""
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            # JVM field read on the checkpoint's backing RDD to free its
-            # blocks — NOT a DataFrame->RDD conversion (nothing is
-            # recomputed or re-planned), hence exempt from the
-            # test_no_rdd_conversion_in_source gate.
-            plan.rdd().unpersist(False)  # jvm-rdd-release
-    except Exception:
-        pass  # session already stopped / plan shape changed
+        for x in items:
+            try:
+                free(x)
+            except Exception:
+                if SparkContext._active_spark_context is not None:
+                    raise
+    finally:
+        items.clear()
 
 
-def release_persisted() -> int:
-    """Unpersist every operator-cached frame and destroy every tracked
-    broadcast; returns how many frames were held."""
-    n = len(_TRACKED)
-    for df in _TRACKED:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-        release_checkpoint(df)
-    _TRACKED.clear()
-    for bc in _BROADCASTS:
-        try:
-            bc.destroy()
-        except Exception:
-            pass  # session already stopped
-    _BROADCASTS.clear()
-    return n
+class Held:
+    """The one owner of the Spark resources an operator holds past a call.
 
+    Three kinds, each freed by its own routine, and one rule between them:
+    a persisted frame (``persist``) recomputes from its lineage after it is
+    freed; a local checkpoint (``checkpoint``) or a broadcast
+    (``broadcast``) cannot, so a plan that reads one fails if it runs
+    again after release.
 
-class RoundState:
-    """Owner of an iterative loop's held frames, used as a ``with`` block.
+    ``HELD``, the module's session owner, holds what a returned result
+    still reads. ``release_persisted()`` frees it; bench.py, perfbench and
+    the test harness call it after consuming each query's result. A
+    long-lived session that skips it keeps those blocks until it stops.
 
-    ``persist(df)`` holds a loop input (the edge list every round joins)
-    until the block exits; ``checkpoint(df, eager)`` materializes a round
-    through ``checkpoint_truncate`` and holds it; ``drop(df)`` frees a
-    superseded or unadopted round at once (frames match by identity). If
-    the block raises — a failed job or a loop's own non-convergence
-    ``RuntimeError`` — every held round is freed. On normal exit the
-    rounds still held back the loop's result, so they pass to
-    ``release_persisted()`` for the caller to free after consuming it.
+    ``with Held() as h`` scopes an operator's own state (an iterative
+    loop's rounds, a query's shared intermediates). On exit its persisted
+    frames are freed: anything downstream can recompute them. Its
+    checkpoints and broadcasts back the result, so on a normal exit they
+    pass to ``HELD``; if the block raises, everything is freed.
     """
 
     def __init__(self) -> None:
-        self._inputs: list[DataFrame] = []
-        self._rounds: list[DataFrame] = []
+        self._frames: list[DataFrame] = []
+        self._checkpoints: list[DataFrame] = []
+        self._broadcasts: list[Broadcast] = []
 
-    def __enter__(self) -> RoundState:
+    def __enter__(self) -> Held:
         return self
 
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is None:
+            HELD._checkpoints += self._checkpoints
+            HELD._broadcasts += self._broadcasts
+            self._checkpoints, self._broadcasts = [], []
+        self.release()
+
     def persist(self, df: DataFrame) -> DataFrame:
-        self._inputs.append(df.persist())
+        """Persist ``df`` at the default storage level and hold it."""
+        self._frames.append(df.persist())
         return df
 
     def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
-        cp = checkpoint_truncate(df, eager)
-        self._rounds.append(cp)
+        """Materialize ``df`` as a local checkpoint that TRUNCATES its
+        logical plan, and hold it.
+
+        Iterative algorithms (connected components' pointer doubling)
+        reference the previous round's frame several times per round;
+        ``persist()`` caches the *data* but the analyzed logical plan still
+        grows multiplicatively (~4x/round here), and analyzing a 4^k-leaf
+        tree OOMs the driver long before the data does. ``localCheckpoint``
+        cuts the plan to a flat ``LogicalRDD`` so every round starts from a
+        constant-size plan — the same reason GraphFrames/GraphX checkpoint
+        each superstep. The blocks are executor-local: an executor loss
+        mid-loop fails the job and the caller reruns it. There is no
+        reliable (checkpoint-dir) form: no caller sets a checkpoint dir.
+
+        Unlike a persisted frame, a checkpoint CANNOT be recomputed after
+        its blocks are freed — free it (``drop``, scope exit on error,
+        ``release_persisted()``) only after fully consuming it.
+
+        ``eager=False`` defers materialization to the caller's NEXT action
+        — used by the iterative loops to fuse the round's convergence count
+        into the materialization job (one driver job per round instead of
+        two — guide §7 driver overhead). The caller MUST then run an action
+        that computes EVERY partition (a full count/aggregate, never
+        limit(1)) before freeing the frame it was derived from: a
+        partially-materialized lazy checkpoint recomputes missing
+        partitions from lineage, and the parent's blocks must still exist
+        for that.
+        """
+        cp = df.localCheckpoint(eager=eager)
+        self._checkpoints.append(cp)
         return cp
 
-    def drop(self, df: DataFrame) -> None:
-        self._rounds = [r for r in self._rounds if r is not df]
-        release_checkpoint(df)
+    def broadcast(self, sc: SparkContext, value) -> Broadcast:
+        """Broadcast ``value`` and hold it; release destroys it."""
+        bc = sc.broadcast(value)
+        self._broadcasts.append(bc)
+        return bc
 
-    def __exit__(self, exc_type, exc, tb) -> None:
-        for df in self._inputs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped
-        for df in self._rounds:
-            if exc_type is None:
-                track(df)
-            else:
-                release_checkpoint(df)
+    def drop(self, df: DataFrame) -> None:
+        """Free a held checkpoint now (a superseded or unadopted round);
+        frames match by identity."""
+        self._checkpoints = [c for c in self._checkpoints if c is not df]
+        _free([df], _unpersist_checkpoint)
+
+    def release(self) -> int:
+        """Free everything held; returns how many frames (persisted and
+        checkpointed) were held."""
+        n = len(self._frames) + len(self._checkpoints)
+        _free(self._frames, methodcaller("unpersist"))
+        _free(self._checkpoints, _unpersist_checkpoint)
+        _free(self._broadcasts, methodcaller("destroy"))
+        return n
+
+
+HELD = Held()
+
+
+def release_persisted() -> int:
+    """Free everything the session owner ``HELD`` holds; returns how many
+    frames were held."""
+    return HELD.release()
 
 
 def undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:

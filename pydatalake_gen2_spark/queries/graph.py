@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pydatalake_gen2_spark.operators.util import checkpoint_truncate, track
+from pydatalake_gen2_spark.operators.util import HELD
 from pydatalake_gen2_spark.queries.sqlexact import f6_half_away as _f6
 from pydatalake_gen2_spark.registry import register, sql_pair
 
@@ -109,19 +109,15 @@ def gr01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columnar (de)serialization) and left it to AQE ReusedExchange; the
     # r11 event-log profile showed that reuse does NOT actually fire
     # here — four identical orders⋈lineitem+distinct stages ran
-    # concurrently per execution. checkpoint_truncate (localCheckpoint)
+    # concurrently per execution. A local checkpoint (HELD.checkpoint)
     # is the form that works: edges computes ONCE, every consumer reads
     # a flat LogicalRDD leaf (plan shrinks ~8x, so per-run planning and
     # codegen shrink too), and AQE still re-plans downstream stages.
     # Measured at sf0.1: 2.5x faster end-to-end, rows identical.
-    edges = track(
-        checkpoint_truncate(
-            o.join(l, o.o_orderkey == l.l_orderkey)
-            .select(
-                F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
-            )
-            .distinct()
-        )
+    edges = HELD.checkpoint(
+        o.join(l, o.o_orderkey == l.l_orderkey)
+        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
+        .distinct()
     )
     # nodes feeds the seed vector AND every iteration's left join; outdeg
     # every iteration's contrib join. Both are node-set-sized aggregations
@@ -130,14 +126,14 @@ def gr01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # finding). Checkpoint each once; the rank recurrence itself stays
     # unrolled (r8: checkpointing RANKS per round was slower at 3
     # iterations, and de-unrolling breaks the exact-decimal hash design).
-    nodes = track(checkpoint_truncate(
+    nodes = HELD.checkpoint(
         edges.select(F.col("src").alias("node")).union(
             edges.select(F.col("dst").alias("node"))
         ).distinct()
-    ))
-    outdeg = track(checkpoint_truncate(
+    )
+    outdeg = HELD.checkpoint(
         edges.groupBy("src").agg(F.count("*").cast("bigint").alias("deg"))
-    ))
+    )
     ranks = nodes.select("node", F.lit("1.0").cast("decimal(18,10)").alias("rank"))
     for _ in range(_N_ITER):
         # integer round-half-up of (rank/deg) at scale 10:
@@ -239,7 +235,7 @@ def gr02_triangle_count(spark, sf_dir):
     Weight-thresholding (disparity filtering) is how co-occurrence
     networks are made countable; the remaining knob is l02b's max_df cap
     on pathologically hot parts."""
-    from pydatalake_gen2_spark.operators.util import spread, track_persist
+    from pydatalake_gen2_spark.operators.util import HELD, spread
 
     li = spark.table("lineitem")
     ps = spread(
@@ -253,7 +249,7 @@ def gr02_triangle_count(spark, sf_dir):
         .filter(F.col("i") < F.col("j"))
         .select("u", "v")
     )
-    w = track_persist(
+    w = HELD.persist(
         pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("cnt"))
     )
     t = w.selectExpr(
@@ -325,7 +321,7 @@ def _spark_backbone(spark: SparkSession) -> DataFrame:
     keep the self-join text; gr02's hash parity covers the equivalence).
     Caller releases via release_persisted().
     """
-    from pydatalake_gen2_spark.operators.util import spread, track_persist
+    from pydatalake_gen2_spark.operators.util import HELD, spread
 
     li = spark.table("lineitem")
     ps = spread(
@@ -349,7 +345,7 @@ def _spark_backbone(spark: SparkSession) -> DataFrame:
     # state is bounded by DISTINCT EDGES PER TASK, not input rows — it
     # cannot spill that way. The raw-pair shuffle is (u,v) int pairs,
     # compressed; sf10 A/B: backbone materialization 200 -> 52 s cold.
-    w = track_persist(
+    w = HELD.persist(
         pairs.repartition("u", "v").groupBy("u", "v").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -592,9 +588,10 @@ def gr06_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("label")
     )
-    # the tracked labels checkpoint is released by the caller AFTER
-    # consuming (harness/bench call release_persisted between pairs) —
-    # releasing here would free blocks the returned lazy frame still needs
+    # the labels checkpoint is held by the session owner and freed by
+    # release_persisted() after the caller consumes the result
+    # (harness/bench call it between pairs) — freeing it here would drop
+    # blocks the returned lazy frame still needs, and it does not recompute
     return out.select("label", "e_within", "deg_sum", "q_contrib")
 
 
@@ -777,14 +774,10 @@ def gr08_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = spark.table("lineitem")
     # Same checkpoint-truncated edge list as gr01 (see the note there):
     # the subtree is referenced ~8x and exchange reuse does not dedup it.
-    edges = track(
-        checkpoint_truncate(
-            o.join(l, o.o_orderkey == l.l_orderkey)
-            .select(
-                F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
-            )
-            .distinct()
-        )
+    edges = HELD.checkpoint(
+        o.join(l, o.o_orderkey == l.l_orderkey)
+        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
+        .distinct()
     )
     # nodes feeds the seed vector AND every iteration's left join; outdeg
     # every iteration's contrib join. Both are node-set-sized aggregations
@@ -793,14 +786,14 @@ def gr08_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # finding). Checkpoint each once; the rank recurrence itself stays
     # unrolled (r8: checkpointing RANKS per round was slower at 3
     # iterations, and de-unrolling breaks the exact-decimal hash design).
-    nodes = track(checkpoint_truncate(
+    nodes = HELD.checkpoint(
         edges.select(F.col("src").alias("node")).union(
             edges.select(F.col("dst").alias("node"))
         ).distinct()
-    ))
-    outdeg = track(checkpoint_truncate(
+    )
+    outdeg = HELD.checkpoint(
         edges.groupBy("src").agg(F.count("*").cast("bigint").alias("deg"))
-    ))
+    )
     seed_term = (
         F.when(F.col("node") % 50 == 0, F.lit("0.15"))
         .otherwise(F.lit("0.00"))
@@ -988,14 +981,10 @@ def gr10_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = spark.table("lineitem")
     # Same checkpoint-truncated edge list as gr01 (see the note there):
     # edges feeds all 5 half-iterations' joins and the seed aggregation.
-    edges = track(
-        checkpoint_truncate(
-            o.join(l, o.o_orderkey == l.l_orderkey)
-            .select(
-                F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
-            )
-            .distinct()
-        )
+    edges = HELD.checkpoint(
+        o.join(l, o.o_orderkey == l.l_orderkey)
+        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
+        .distinct()
     )
     dec = "decimal(38,0)"
     a = edges.groupBy("dst").agg(F.count("*").cast(dec).alias("a"))
@@ -1015,13 +1004,13 @@ def gr10_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             # 0 Reused in the pre-fix plan — same class as gr01's edge
             # list). Checkpoint the node-set-sized final frames so the
             # chain executes once and every consumer reads a flat leaf.
-            h = track(checkpoint_truncate(h))
+            h = HELD.checkpoint(h)
         a = (
             edges.join(h, "src")
             .groupBy("dst")
             .agg(F.sum("h").cast(dec).alias("a"))
         )
-    a = track(checkpoint_truncate(a))
+    a = HELD.checkpoint(a)
     amax = a.agg(F.max("a").alias("m"))
     hmax = h.agg(F.max("h").alias("m"))
     # round-6: score_norm = f6/1e6 via exact DECIMAL DIV (same spelling

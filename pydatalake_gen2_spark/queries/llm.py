@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pydatalake_gen2_spark.operators import dedup, similarity, text
-from pydatalake_gen2_spark.operators.util import track_persist
+from pydatalake_gen2_spark.operators.util import HELD, Held
 from pydatalake_gen2_spark.operators.vectors import as_double, dot, l2_norm, normalize
 from pydatalake_gen2_spark.registry import register
 
@@ -72,15 +72,12 @@ def l02_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.table("documents")
     cand = dedup.minhash_candidate_pairs(docs, tau=0.3).select("id_a", "id_b")
     truth = dedup.exact_jaccard_pairs(docs, tau=0.3).select("id_a", "id_b")
-    cand.persist()
-    truth.persist()
-    try:
+    with Held() as held:
+        held.persist(cand)
+        held.persist(truth)
         n_pairs = cand.count()
         missed = truth.join(cand, ["id_a", "id_b"], "left_anti").count()
         spurious = cand.join(truth, ["id_a", "id_b"], "left_anti").count()
-    finally:
-        cand.unpersist()
-        truth.unpersist()
     return spark.createDataFrame(
         pd.DataFrame(
             [
@@ -551,10 +548,10 @@ def lx_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # adc feeds per_q + gate, exact feeds rows + gate: persist the tiny
     # (|queries| x k) results so the compressed code scan and brute-force
     # leg run once each, not per consumer (see lx_ivf_topk note).
-    adc = track_persist(
+    adc = HELD.persist(
         pq.pq_topk(emb, queries, k=_ANN_K, codebooks=_pq_codebook(spark, sf_dir))
     )
-    exact = track_persist(similarity.cosine_topk(emb, queries, k=_ANN_K))
+    exact = HELD.persist(similarity.cosine_topk(emb, queries, k=_ANN_K))
     rows = _ann_rank_fold(exact, "exact_topk_ids", "exact_top1_cos")
     per_q = adc.groupBy("query_id").agg(
         (F.count(F.lit(1)) == _ANN_K).alias("pq_returned_k")
@@ -595,8 +592,6 @@ def lx_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank), plus the measured-with-margin mean recall bound."""
     from pydatalake_gen2_spark.operators import pq
 
-    from pydatalake_gen2_spark.operators.util import track_persist
-
     emb = spark.table("embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     cb = _pq_codebook(spark, sf_dir)
@@ -605,7 +600,7 @@ def lx_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrounded ranking; the per-batch prune keeps k*mult+1 >= k+1), and
     # the rerank consumes the same frame (round-7 bench fix: the audit
     # previously paid the corpus code scan twice).
-    shortlist = track_persist(pq.pq_topk(emb, queries, k=_ANN_K * 4, codebooks=cb))
+    shortlist = HELD.persist(pq.pq_topk(emb, queries, k=_ANN_K * 4, codebooks=cb))
     adc = shortlist.filter(F.col("rn") <= _ANN_K)
     rr = pq.pq_rerank(
         emb, queries, k=_ANN_K, codebooks=cb,
@@ -614,11 +609,11 @@ def lx_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact feeds THREE consumers (rows, adc_r, rr_r) and per_q feeds two
     # (final join + gate): persist both tiny frames so the brute-force
     # exact leg and the rerank recall join run once (see lx_ivf_topk note).
-    exact = track_persist(similarity.cosine_topk(emb, queries, k=_ANN_K))
+    exact = HELD.persist(similarity.cosine_topk(emb, queries, k=_ANN_K))
     rows = _ann_rank_fold(exact, "exact_topk_ids", "exact_top1_cos")
     adc_r = _ann_recall_per_query(exact, adc).withColumnRenamed("recall", "_ar")
     rr_r = _ann_recall_per_query(exact, rr).withColumnRenamed("recall", "_rr")
-    per_q = track_persist(adc_r.join(rr_r, "query_id").select(
+    per_q = HELD.persist(adc_r.join(rr_r, "query_id").select(
         "query_id", (F.col("_rr") >= F.col("_ar")).alias("rerank_recall_ge_adc"),
         "_rr",
     ))
@@ -668,11 +663,11 @@ def lx_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Leg result frames feed two consumers each (appx -> per_q + gate,
     # exact -> rows + gate): persist so the probe join / brute-force
     # scoring runs once, not once per consumer (see lx_ivf_topk note).
-    appx = track_persist(pq.ivfpq_topk(
+    appx = HELD.persist(pq.ivfpq_topk(
         emb, k=_ANN_K, codebooks=_pq_codebook(spark, sf_dir),
         centroids=_ivf_codebook(spark, sf_dir), n_probe=6, query_pred=pred,
     ))
-    exact = track_persist(similarity.cosine_topk(emb, emb.filter(pred), k=_ANN_K))
+    exact = HELD.persist(similarity.cosine_topk(emb, emb.filter(pred), k=_ANN_K))
     rows = _ann_rank_fold(exact, "exact_topk_ids", "exact_top1_cos")
     per_q = appx.groupBy("query_id").agg(
         (F.count(F.lit(1)) == _ANN_K).alias("ivfpq_returned_k")
@@ -890,10 +885,10 @@ def lx_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # heavy candidate join + window ran once per consumer — ReusedExchange
     # does not fire for concurrent identical subtrees (the r11 event-log
     # finding), but block-level get-or-compute on a persisted frame does.
-    full = track_persist(similarity.ivf_topk(
+    full = HELD.persist(similarity.ivf_topk(
         emb, k=_ANN_K, n_probe=len(cents), centroids=cents, query_pred=pred
     ))
-    appx = track_persist(similarity.ivf_topk(
+    appx = HELD.persist(similarity.ivf_topk(
         emb, k=_ANN_K, n_probe=6, centroids=cents, query_pred=pred
     ))
     rows = _ann_rank_fold(full, "fullprobe_topk_ids", "fullprobe_top1_cos")
@@ -2185,7 +2180,7 @@ def l36_minhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     same docs).
     Precondition: doc_id is unique and non-NULL, else array_distinct is not
     the corpus-wide .distinct() it replaces (tests/test_correctness.py)."""
-    from pydatalake_gen2_spark.operators.util import spread, track_persist
+    from pydatalake_gen2_spark.operators.util import spread
 
     # spread(): the local fixture is one parquet split, which would run
     # the whole explode+md5 signature pipeline in a single task; on a
@@ -2210,7 +2205,8 @@ def l36_minhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trades one extra pass worth of storage for the ~6x recompute (guide
     # §5: cache what is reused AND expensive; spills to disk, never OOMs).
     # If the toks-dedup win doesn't hold at a given deployment, drop the
-    # toks persist and keep sigs. Caller releases via release_persisted().
+    # toks persist and keep sigs. Both are held by the session owner and
+    # freed by release_persisted() after the caller consumes the result.
     # r12 (VERDICT r11 #3, guide §2.4 "a distinct on data that is already
     # unique"): (doc_id, tok) duplicates can only arise WITHIN one doc's
     # shingle array (doc_id is the table key), so array_distinct on the
@@ -2219,7 +2215,7 @@ def l36_minhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 ladder flagged (3x rows/partition at the fixed 32-partition
     # layout) — disappears outright. Row multiset identical by
     # construction; oracle re-verified at sf0.001/0.01/0.1.
-    toks = track_persist(
+    toks = HELD.persist(
         docs.select(
             "doc_id",
             F.explode(
@@ -2227,7 +2223,7 @@ def l36_minhash_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tok"),
         )
     )
-    sigs = track_persist(
+    sigs = HELD.persist(
         toks.groupBy("doc_id").agg(
             *[
                 F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("tok")))).alias(f"h{i}")
@@ -2846,22 +2842,20 @@ def l49_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins of tiny id-pair sets. All three legs are md5-deterministic, so
     the WHOLE audit hash-matches the oracle running the identical three
     algorithms."""
-    from pydatalake_gen2_spark.operators.util import track_persist
-
     docs = spark.table("documents")
     # persist the three tiny id-pair frames: the final SQL references
     # each through 4 distinct scalar subqueries, and without caching each
-    # detector pipeline would execute 4x (released by the caller via
-    # release_persisted, like every tracked frame)
-    jc = track_persist(
+    # detector pipeline would execute 4x (held by the session owner and
+    # freed by release_persisted after the caller consumes the result)
+    jc = HELD.persist(
         dedup.exact_jaccard_pairs(docs, tau=0.3).select("id_a", "id_b")
     )
-    sh = track_persist(
+    sh = HELD.persist(
         dedup.simhash_neardup_pairs(docs, r=4, exact_recall=True).select(
             "id_a", "id_b"
         )
     )
-    mh = track_persist(
+    mh = HELD.persist(
         l36_minhash_sql(spark, sf_dir).select(
             F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
         )
@@ -3328,13 +3322,11 @@ def l59_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact-verify join), so without a persist the ngram explode +
     # distinct recomputes four times — measured as most of the query's
     # wall time at sf0.1. Values unchanged: caching, not recomputing.
-    from pydatalake_gen2_spark.operators.util import track_persist
-
     # r12: (doc_id, is_batch, tok) duplicates only arise within one doc's
     # shingle array (is_batch is a function of doc_id), so array_distinct
     # dedups row-locally and the corpus-wide distinct exchange disappears
     # (same rewrite as l36 — guide §2.4).
-    toks = track_persist(
+    toks = HELD.persist(
         docs.select(
             "doc_id",
             "is_batch",
@@ -3346,7 +3338,7 @@ def l59_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sigs feeds BOTH sides of the candidate band join; unpersisted, the
     # 8-way md5 min-agg over the cached toks ran twice per query (the
     # same duplication l36 showed in the r11 event-log profile).
-    sigs = track_persist(
+    sigs = HELD.persist(
         toks.groupBy("doc_id", "is_batch").agg(
             *[
                 F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("tok")))).alias(f"h{i}")
@@ -4034,7 +4026,7 @@ def l62_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per run (concurrent identical subtrees never hit ReusedExchange,
     # the r11 finding). The persisted frame is 3 narrow columns per doc,
     # far cheaper than a second double corpus scan at any scale.
-    cand = track_persist(cos.join(bm, "doc_id", "left").select(
+    cand = HELD.persist(cos.join(bm, "doc_id", "left").select(
         "doc_id", F.coalesce("bm25", F.lit(0.0)).alias("bm25"), "cos"
     ))
     mm = cand.agg(
@@ -4178,8 +4170,6 @@ def l66_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        from pydatalake_gen2_spark.operators.util import checkpoint_truncate, track
-
         words = (
             words.crossJoin(F.broadcast(best))
             .withColumn(
@@ -4193,9 +4183,10 @@ def l66_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # checkpoint-truncate the per-round state so the unrolled lineage
         # doesn't grow multiplicatively (iterative-operator discipline).
-        # Tracked, not dropped per round: the returned `merges` plan reads
-        # every round, so all are freed by release_persisted() after use.
-        words = track(checkpoint_truncate(words))
+        # Held by the session owner, not dropped per round: the returned
+        # `merges` plan reads every round, and a checkpoint does not
+        # recompute, so all are freed by release_persisted() after use.
+        words = HELD.checkpoint(words)
         stats = words.agg(
             F.sum(
                 F.col("c")
@@ -5498,9 +5489,8 @@ def lx_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, exact inertia, first 4 centroid components."""
     from pydatalake_gen2_spark.operators import kmeans
 
-    pts = kmeans.quantize(spark.table("embeddings"))
-    pts = pts.persist()
-    try:
+    with Held() as held:
+        pts = held.persist(kmeans.quantize(spark.table("embeddings")))
         cents, assigned = kmeans.lloyd(pts, k=8, iters=2, dim=64)
         stats = {
             r["cid"]: (r["n"], r["inertia"])
@@ -5508,8 +5498,6 @@ def lx_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dist").alias("inertia"))
             .collect()
         }
-    finally:
-        pts.unpersist()
     import pandas as pd
 
     rows = [

@@ -1581,19 +1581,47 @@ def test_kmeans_fused_round_matches_python_lloyd(spark):
     assert hist[0][0] == [-5 // 6, 9 // 6, -15 // 6] == [-1, 1, -3]
 
 
-def test_lsh_topk_broadcast_destroyed_on_release(spark, sf_dir):
+def test_lsh_topk_broadcast_destroyed_on_release(spark, sf_dir, monkeypatch):
     """lsh_topk's small path broadcasts the id-sorted matrix; after the
-    result is consumed, release_persisted() must destroy it."""
+    result is consumed, release_persisted() must destroy it. The
+    broadcast is observed where the SparkContext makes it."""
     from pydatalake_gen2_spark.operators import similarity, util
 
+    sc = spark.sparkContext
+    made = []
+    real_broadcast = sc.broadcast
+    monkeypatch.setattr(
+        sc, "broadcast", lambda v: made.append(real_broadcast(v)) or made[-1]
+    )
     util.release_persisted()
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     similarity.lsh_topk(emb, k=3).collect()
-    held = list(util._BROADCASTS)
-    assert len(held) == 1
+    assert len(made) == 1
+    assert made[0]._jbroadcast.isValid()
     util.release_persisted()
-    assert util._BROADCASTS == []
-    assert not held[0]._jbroadcast.isValid()
+    assert not made[0]._jbroadcast.isValid()
+
+
+def test_held_release_raises_on_failed_free_in_live_session(spark):
+    """Only a stopped SparkContext excuses a failed free: with the
+    session live, a free that raises surfaces, and the owner still
+    forgets the item instead of retrying it forever."""
+    import pytest
+
+    from pydatalake_gen2_spark.operators.util import Held
+
+    class Stuck:
+        def persist(self):
+            return self
+
+        def unpersist(self):
+            raise RuntimeError("block manager refused")
+
+    owner = Held()
+    owner.persist(Stuck())
+    with pytest.raises(RuntimeError, match="refused"):
+        owner.release()
+    assert owner.release() == 0
 
 
 def test_pair_cos_lookup_rejects_absent_id():

@@ -193,7 +193,7 @@ def test_simhash_neardup_join_is_equi_not_allpairs(spark, sf_dir):
 def test_no_rdd_conversion_in_source(spark, sf_dir):
     """Library code must stay in the DataFrame plan: touching .rdd forces
     a logical->RDD conversion per call (VERDICT r2 'What's wrong' #2).
-    One exemption: lines tagged `jvm-rdd-release` (util.release_checkpoint)
+    One exemption: lines tagged `jvm-rdd-release` (util._unpersist_checkpoint)
     read the JVM-side LogicalRDD field to unpersist checkpoint blocks —
     a block-manager release, not a conversion; nothing is re-planned."""
     import glob
@@ -211,6 +211,40 @@ def test_no_rdd_conversion_in_source(spark, sf_dir):
     assert not hits, hits
 
 
+def test_no_raw_resource_calls_in_source():
+    """Every held Spark resource goes through ``util.Held``: outside
+    ``operators/util.py`` no code calls ``.persist(``, ``.unpersist(``,
+    ``.localCheckpoint(``, ``.cache(`` or ``.broadcast(`` on a frame or a
+    SparkContext. Calls on ``HELD`` or on a name bound by
+    ``with Held() as name`` are the owner's, and ``F.broadcast`` is a
+    join hint. Code only: the AST walk skips docstrings and comments."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pydatalake_gen2_spark"
+    banned = {"persist", "unpersist", "localCheckpoint", "cache", "broadcast"}
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path.relative_to(root).as_posix() == "operators/util.py":
+            continue
+        tree = ast.parse(path.read_text())
+        owners = {"HELD"} | {
+            item.optional_vars.id
+            for node in ast.walk(tree) if isinstance(node, ast.With)
+            for item in node.items
+            if isinstance(item.optional_vars, ast.Name)
+            and isinstance(item.context_expr, ast.Call)
+            and getattr(item.context_expr.func, "id", None) == "Held"
+        }
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr, recv = node.func.attr, getattr(node.func.value, "id", None)
+            if attr in banned and recv not in owners and (attr, recv) != ("broadcast", "F"):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}: .{node.func.attr}(")
+    assert not hits, hits
+
+
 def test_jaccard_df_cap_has_no_window_over_tok(spark, sf_dir):
     """The max_df hot-shingle cap must compute document frequency with a
     partial-aggregating groupBy, never a window sort over the (by
@@ -224,30 +258,54 @@ def test_jaccard_df_cap_has_no_window_over_tok(spark, sf_dir):
     assert "Window" not in plan, plan
 
 
-def test_library_ops_release_cached_blocks(spark, sf_dir):
-    """ivf_topk / lsh_topk / connected_components / l66's BPE rounds
-    persist or checkpoint intermediates; after consuming +
-    release_persisted() the cached-RDD map returns to its baseline
-    (VERDICT r2 'What's wrong' #1)."""
+def test_library_ops_release_cached_blocks(spark, sf_dir, monkeypatch):
+    """ivf_topk / lsh_topk / connected_components / bfs_distances / l66's
+    BPE rounds persist, checkpoint or broadcast intermediates; after
+    consuming + release_persisted() the cached-RDD map and the RDD
+    storage bytes (memory + disk) return to their baseline and lsh_topk's
+    broadcast is destroyed — twice in one session, so a second run
+    neither leaks nor trips over the first one's release (VERDICT r2
+    'What's wrong' #1)."""
     from pydatalake_gen2_spark.operators import dedup, similarity
+    from pydatalake_gen2_spark.operators.graph import bfs_distances
     from pydatalake_gen2_spark.operators.util import release_persisted
 
-    def n_cached() -> int:
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    sc = spark.sparkContext
+    made = []
+    real_broadcast = sc.broadcast
+    monkeypatch.setattr(
+        sc, "broadcast", lambda v: made.append(real_broadcast(v)) or made[-1]
+    )
+
+    def held() -> tuple[int, int]:
+        infos = sc._jsc.sc().getRDDStorageInfo()
+        return (
+            sc._jsc.getPersistentRDDs().size(),
+            sum(i.memSize() + i.diskSize() for i in infos),
+        )
 
     release_persisted()
-    base = n_cached()
+    base = held()
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    similarity.ivf_topk(emb, k=3).collect()
-    similarity.lsh_topk(emb, k=3).collect()
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a BIGINT, id_b BIGINT"
     )
-    dedup.connected_components(edges).collect()
-    load_all()["l66_bpe_train"].spark_fn(spark, sf_dir).collect()
-    assert n_cached() > base  # the caches were really held...
-    release_persisted()
-    assert n_cached() == base  # ...and really released
+    seeds = spark.createDataFrame([(1,)], "node BIGINT")
+    for _ in range(2):
+        made.clear()
+        similarity.ivf_topk(emb, k=3).collect()
+        similarity.lsh_topk(emb, k=3).collect()
+        dedup.connected_components(edges).collect()
+        bfs_distances(edges, seeds).collect()
+        load_all()["l66_bpe_train"].spark_fn(spark, sf_dir).collect()
+        n_rdds, n_bytes = held()
+        # the caches were really held...
+        assert n_rdds > base[0] and n_bytes > base[1]
+        assert len(made) == 1 and made[0]._jbroadcast.isValid()
+        release_persisted()
+        # ...and really released
+        assert held() == base
+        assert not made[0]._jbroadcast.isValid()
 
 
 def test_decontaminate_broadcasts_benchmark_grams(spark, sf_dir):

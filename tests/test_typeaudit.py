@@ -154,6 +154,47 @@ def test_planted_pair_rejected(spark, duck, sf_dir, case):
     assert after == built[-1], "run_pair started a job after construction"
 
 
+def test_run_pair_releases_held_resources_when_collect_raises(spark, duck, sf_dir):
+    """A pair whose operators hold a persisted frame, a checkpoint and a
+    broadcast, then fail in ``collect``: after ``run_pair`` raises, the
+    owner holds nothing and every block is back at baseline, so a sweep
+    that catches the error does not run the next pair beside them."""
+    from pyspark.sql import functions as F
+
+    from pydatalake_gen2_spark import registry as reg
+    from pydatalake_gen2_spark.harness import run_pair
+    from pydatalake_gen2_spark.operators.util import HELD, release_persisted
+    from pydatalake_gen2_spark.registry import QueryPair
+
+    sc = spark.sparkContext
+
+    def n_cached() -> int:
+        return sc._jsc.getPersistentRDDs().size()
+
+    made = []
+
+    def spark_fn(s, d):
+        reg.ensure_views(s, d)
+        region = HELD.persist(s.table("region"))
+        region.count()  # materialize, so the cache holds blocks
+        HELD.checkpoint(s.table("nation"))
+        made.append(HELD.broadcast(s.sparkContext, [1, 2, 3]))
+        return region.select(F.raise_error(F.lit("planted collect failure")))
+
+    release_persisted()
+    base = n_cached()
+    name = "zz_test_planted_collect_failure"
+    reg.REGISTRY[name] = QueryPair(name, spark_fn, None)
+    try:
+        with pytest.raises(Exception, match="planted collect failure"):
+            run_pair(spark, duck, sf_dir, name)
+    finally:
+        del reg.REGISTRY[name]
+    assert n_cached() == base
+    assert not made[0]._jbroadcast.isValid()
+    assert release_persisted() == 0
+
+
 def test_cast_hugeint_oracle_accepted(spark, duck, sf_dir):
     from pydatalake_gen2_spark import registry as reg
 

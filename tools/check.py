@@ -44,8 +44,12 @@ def analyze_only(sf_dir: str, names: list[str]) -> int:
 
     Each pair with an oracle then gets ``run_pair``'s static audit,
     ``typeaudit.audit_pair`` (dtype-class parity and the shape contract),
-    jobless on both sides.
+    jobless on both sides. After each pair, pass or fail,
+    ``release_persisted()`` frees what its construction held (eager
+    persists, checkpoints, broadcasts), so the sweep's footprint stays
+    that of one pair.
     """
+    from pydatalake_gen2_spark.operators.util import release_persisted
     from pydatalake_gen2_spark.registry import REGISTRY
     from pydatalake_gen2_spark.typeaudit import audit_pair
 
@@ -66,6 +70,8 @@ def analyze_only(sf_dir: str, names: list[str]) -> int:
         except Exception as e:  # noqa: BLE001 — report every failure class
             bad += 1
             print(f"FAIL {name:38s} {type(e).__name__}: {str(e)[:300]}")
+        finally:
+            release_persisted()
     print(f"\nanalyze+types+shape: {len(names) - bad}/{len(names)} pass "
           f"({time.time() - t0:.1f}s)")
     return 1 if bad else 0

@@ -13,7 +13,9 @@ operators; ADLS Gen2 auth collapses to connector conf (sources/lake.py).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,10 +24,14 @@ from pyspark.sql import functions as F
 from pydatalake_gen2_spark.registry import register, sql_pair
 from pydatalake_gen2_spark.tables import TABLES, load_table
 
-_tmp_root = tempfile.mkdtemp(prefix="pydatalake_sinks_")
+_tmp_root: str | None = None
 
 
 def _tmp(name: str, sf_dir: str) -> str:
+    global _tmp_root
+    if _tmp_root is None:  # made on first use, removed at interpreter exit
+        _tmp_root = tempfile.mkdtemp(prefix="pydatalake_sinks_")
+        atexit.register(shutil.rmtree, _tmp_root, ignore_errors=True)
     tag = sf_dir.strip("/").replace("/", "_")
     return os.path.join(_tmp_root, f"{name}_{tag}")
 

@@ -16,6 +16,11 @@ Confs chosen for oracle parity and scale-out design:
   host's RAM in whole GB (``default_driver_memory``). In local mode the
   driver JVM holds every executor too; the rest of the host is left to
   the Python workers and the OS.
+- ``spark.python.daemon.module``: on CPython 3.11 (3.13 is lazy) a reused
+  worker re-read pyspark.zip's directory per ``zipimporter`` on each
+  task's ``importlib.invalidate_caches()``, 0.2-0.3 s CPU per task;
+  ``worker.py`` skips that while the zip is unchanged. Workers import this
+  package, as UDFs must: ``kmeans.update`` pickles ``_nearest`` by reference.
 """
 
 from __future__ import annotations
@@ -77,6 +82,7 @@ def get_spark(
         # this conf lets the loader read those as raw int64 and truncate
         # to µs (tables.py sniffs the footer). Harmless for µs fixtures.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "pydatalake_gen2_spark.worker")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

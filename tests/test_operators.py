@@ -613,22 +613,21 @@ def test_sorted_layout_files_are_disjoint(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    roots = _glob.glob("/tmp/pydatalake_sinks_*/s13_sorted_*" )
-    assert roots
+    from pydatalake_gen2_spark.queries.scans import _tmp
+
     ranges = []
-    for root in roots[:1]:
-        for f in _glob.glob(f"{root}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                col = next(
-                    md.row_group(rg).column(i)
-                    for i in range(md.num_columns)
-                    if md.row_group(rg).column(i).path_in_schema == "l_shipdate"
-                )
-                mins.append(col.statistics.min)
-                maxs.append(col.statistics.max)
-            ranges.append((min(mins), max(maxs)))
+    for f in _glob.glob(f"{_tmp('s13_sorted', sf_dir)}/*.parquet"):
+        md = pq.ParquetFile(f).metadata
+        mins, maxs = [], []
+        for rg in range(md.num_row_groups):
+            col = next(
+                md.row_group(rg).column(i)
+                for i in range(md.num_columns)
+                if md.row_group(rg).column(i).path_in_schema == "l_shipdate"
+            )
+            mins.append(col.statistics.min)
+            maxs.append(col.statistics.max)
+        ranges.append((min(mins), max(maxs)))
     ranges.sort()
     assert len(ranges) > 1
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
@@ -722,10 +721,10 @@ def test_zorder_file_skipping(spark, sf_dir):
     from pydatalake_gen2_spark.registry import load_all
 
     load_all()["s18_zorder_layout"].spark_fn(spark, sf_dir).collect()
-    roots = _glob.glob("/tmp/pydatalake_sinks_*/s18_zorder_*")
-    assert roots
+    from pydatalake_gen2_spark.queries.scans import _tmp
+
     boxes = []
-    for f in _glob.glob(f"{roots[0]}/*.parquet"):
+    for f in _glob.glob(f"{_tmp('s18_zorder', sf_dir)}/*.parquet"):
         md = pq.ParquetFile(f).metadata
         stats = {"l_partkey": [], "l_suppkey": []}
         for rg in range(md.num_row_groups):

@@ -93,3 +93,20 @@ def test_check_rejects_a_prefix_that_matches_no_pair():
     )
     assert out.returncode == 2
     assert "no registered pair matches" in out.stderr
+
+
+def test_check_counts_unpartitioned_windows(spark):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    check = _load("check")
+    df = spark.range(10).withColumn("g", F.col("id") % 2)
+    rn = F.row_number()
+    assert check.unpartitioned_windows(df.withColumn("r", rn.over(Window.orderBy("id")))) == 1
+    by_g = Window.partitionBy("g").orderBy("id")
+    assert check.unpartitioned_windows(df.withColumn("r", rn.over(by_g))) == 0
+    sub = spark.sql(
+        "SELECT id, (SELECT max(r) FROM (SELECT row_number() OVER (ORDER BY id) r"
+        " FROM range(3))) m FROM range(2)"
+    )
+    assert check.unpartitioned_windows(sub) == 1

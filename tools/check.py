@@ -12,6 +12,10 @@ the dq07 class of bug — then applies the sweep's static audit. Seconds
 for most of the registry; pairs that materialize fixtures inside their
 builder still pay that one-time cost.
 
+``--analyze`` also lists, without failing, the pairs whose optimized plan
+holds a ``Window`` with an empty ``partitionSpec`` (each runs in one task:
+``WindowExec: No Partition Defined``).
+
 Each pair's verdict and wall time print as it lands, flushed, so long
 sweeps at sf1+ (where one heavy DuckDB oracle can grind for an hour) are
 observable and interruptible, and their partial output survives as an
@@ -39,6 +43,20 @@ def _selected(prefixes: list[str]) -> list[str]:
     )
 
 
+def unpartitioned_windows(df) -> int:
+    """``Window`` nodes with an empty ``partitionSpec`` in ``df``'s
+    optimized plan, subqueries included; walked through py4j, no job.
+    Windows that ran in construction-time jobs are not in the plan."""
+    n, stack = 0, [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            n += 1
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return n
+
+
 def analyze_only(sf_dir: str, names: list[str]) -> int:
     """Construct + analyze every selected pair; no job execution.
 
@@ -56,12 +74,15 @@ def analyze_only(sf_dir: str, names: list[str]) -> int:
     spark = get_spark("analyze")
     con = duck_connect(sf_dir)
     bad = 0
+    windowed = []
     t0 = time.time()
     for name in names:
         pair = REGISTRY[name]
         try:
             df = pair.spark_fn(spark, sf_dir)
             _ = df.schema  # forces full analysis; never runs a job
+            if unpartitioned_windows(df):
+                windowed.append(name)
             if pair.duck_sql is not None:
                 problems = audit_pair(con, pair.duck_sql, df)
                 if problems:
@@ -72,7 +93,8 @@ def analyze_only(sf_dir: str, names: list[str]) -> int:
             print(f"FAIL {name:38s} {type(e).__name__}: {str(e)[:300]}")
         finally:
             release_persisted()
-    print(f"\nanalyze+types+shape: {len(names) - bad}/{len(names)} pass "
+    print(f"\nunpartitioned Window ({len(windowed)}): {' '.join(windowed)}")
+    print(f"analyze+types+shape: {len(names) - bad}/{len(names)} pass "
           f"({time.time() - t0:.1f}s)")
     return 1 if bad else 0
 
